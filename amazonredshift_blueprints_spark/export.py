@@ -27,7 +27,8 @@ import os
 import shutil
 import tempfile
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from .functions import translate_redshift_sql
 from .ingest import combine_folder_and_file_name, convert_to_boolean
@@ -56,6 +57,15 @@ def store_query_results(
     )
 
 
+def _counted(df: DataFrame):
+    """``(observed_df, rows)``: the row count rides the write's own job
+    as an ``observe`` metric, and ``rows()`` reads it once the write has
+    run (the pattern dml.py uses around its rewrites)."""
+    obs = Observation()
+    observed = df.observe(obs, F.count(F.lit(1)).alias("n_rows"))
+    return observed, lambda: int(obs.get["n_rows"])
+
+
 def write_csv(
     df: DataFrame,
     destination_path: str,
@@ -65,16 +75,17 @@ def write_csv(
 ) -> int:
     """CSV sink for an arbitrary DataFrame (A8/A9).
 
-    The returned row count comes from ``df.count()`` on the input plan —
-    counting physical lines in the output would over-count quoted fields
-    with embedded newlines, and re-reading the written CSV would be a
-    second full scan purely for the return value.
+    The returned row count is observed on the written plan itself (see
+    :func:`_counted`) — counting physical lines in the output would
+    over-count quoted fields with embedded newlines, and a separate
+    ``df.count()`` would execute the whole query a second time.
     """
     parent = os.path.dirname(os.path.abspath(destination_path))
     os.makedirs(parent, exist_ok=True)  # A9, store_query_results.py:147-149
+    df, rows = _counted(df)
     if not single_file:
         df.write.option("header", include_header).mode("overwrite").csv(destination_path)
-        return df.count()
+        return rows()
 
     # One named file: single writer task into a temp dir, then move the
     # part file to the requested path.
@@ -92,7 +103,7 @@ def write_csv(
         shutil.move(parts[0], destination_path)
     finally:
         shutil.rmtree(tmp_dir, ignore_errors=True)
-    return df.count()
+    return rows()
 
 
 def write_result(
@@ -134,7 +145,7 @@ def write_result(
         raise ValueError(f"format must be csv/json/parquet/orc, got {format!r}")
     parent = os.path.dirname(os.path.abspath(destination_path))
     os.makedirs(parent, exist_ok=True)
-    n = df.count()
+    df, rows = _counted(df)
     if partition_by:
         w = df.write.mode("overwrite").format(format).partitionBy(*partition_by)
         if format == "csv":
@@ -142,7 +153,7 @@ def write_result(
         if options:
             w = w.options(**options)
         w.save(destination_path)
-        return n
+        return rows()
     if not single_file:
         w = df.write.mode("overwrite").format(format)
         if format == "csv":
@@ -150,7 +161,7 @@ def write_result(
         if options:
             w = w.options(**options)
         w.save(destination_path)
-        return n
+        return rows()
     tmp_dir = tempfile.mkdtemp(prefix="bp_export_", dir=parent)
     try:
         w = df.coalesce(1).write.mode("overwrite").format(format)
@@ -165,7 +176,7 @@ def write_result(
         shutil.move(parts[0], destination_path)
     finally:
         shutil.rmtree(tmp_dir, ignore_errors=True)
-    return n
+    return rows()
 
 
 def get_args(argv: list[str] | None = None) -> argparse.Namespace:

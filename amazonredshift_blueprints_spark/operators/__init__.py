@@ -13,8 +13,10 @@
 - ``sessions``    — event sessionization (gap-and-islands).
 - ``timeseries``  — bucket grids, LOCF gap-fill, robust outliers.
 - ``sampling``    — deterministic splits, stratified samples, corpus mix.
-- ``multimodal``  — binary-column plumbing; real PPM decode, stubs for
-  codec formats absent from the container.
+- ``multimodal``  — binary-column plumbing; native image/audio codecs
+  (PPM/PNM, PNG/APNG, GIF, BMP, QOI, TGA, TIFF, ICO, baseline,
+  progressive and CMYK JPEG, WAV/AIFF/AU, G.711, IMA ADPCM) behind one
+  per-row Arrow scaffold.
 - ``maintenance`` — small-file compaction, column profiling, HLL
   sketch tables.
 - ``geo``         — grid-bucketed spatial within-radius join.

@@ -968,7 +968,16 @@ def duplicate_groups(
     gate = int(os.environ.get("SPARK_GRAFT_CC_DRIVER_EDGES", "200000"))
     id_type = dict(edges.dtypes)["src"]  # union-coerced common id type
     if gate > 0 and id_type in ("tinyint", "smallint", "int", "bigint"):
-        if edges.limit(gate + 1).count() <= gate:
+        local = (
+            edges.collect()  # bounded by the gate
+            if edges.limit(gate + 1).count() <= gate
+            else None
+        )
+        # A NULL endpoint takes the distributed loop: its NULL-key join
+        # semantics define the result, which union-find cannot key on.
+        if local is not None and all(
+            s is not None and d is not None for s, d in local
+        ):
             parent: dict = {}
 
             def find(x):
@@ -979,8 +988,7 @@ def duplicate_groups(
                     parent[x], x = root, parent[x]
                 return root
 
-            for r in edges.collect():  # bounded by the gate
-                s, d = r[0], r[1]
+            for s, d in local:
                 parent.setdefault(s, s)
                 parent.setdefault(d, d)
                 rs, rd = find(s), find(d)
@@ -995,10 +1003,12 @@ def duplicate_groups(
             edges.unpersist()
             from pyspark.sql.types import LongType, StructField, StructType
 
+            # the loop's shape: both columns are NULL-able iff the ids are
+            src = edges.schema["src"]
             out_schema = StructType(
                 [
-                    StructField("doc_id", edges.schema["src"].dataType),
-                    StructField("group_id", LongType()),
+                    StructField("doc_id", src.dataType, src.nullable),
+                    StructField("group_id", LongType(), src.nullable),
                 ]
             )
             return pairs.sparkSession.createDataFrame(

@@ -38,19 +38,26 @@ and consumed at the declared boundaries with DC predictors reset) —
 pure numpy DCT + canonical Huffman, cross-validated against the
 JVM's independent javax.imageio decoder; exactness contract for
 block-constant tiles documented at the JPEG section below.
-Progressive JPEG, non-integer sampling grids, CMYK, and video fall
-through to pillow when present and otherwise raise
-NotImplementedError. The
-hash-based featureizer remains for payloads that cannot decode here;
-every piece of real plumbing (binary Arrow transfer, batch iteration,
-schema contract) is shared between both paths, so swapping in a full
-decoder is a one-function change.
+Progressive JPEG (SOF2, every Annex G scan kind, c216) and
+4-component Adobe CMYK/YCCK JPEG (c226) decode natively as well
+(``_decode_jpeg_progressive``, :func:`image_cmyk_stats`). Non-integer
+chroma sampling grids and 16-bit quantization tables refuse inside
+:func:`decode_jpeg` with a NotImplementedError naming the reason.
+Only a payload whose magic matches no native format falls through to
+pillow when present, and otherwise raises NotImplementedError; video
+has no decoder (:func:`sample_frames` slices bytes). The hash-based
+featureizer remains for payloads that cannot decode here; every piece
+of real plumbing (binary Arrow transfer, batch iteration, schema
+contract) is shared between both paths through the ``_synthesize`` /
+``_per_payload`` scaffold below, so swapping in a full decoder is a
+one-function change.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -73,6 +80,158 @@ FEATURE_SCHEMA = StructType(
         StructField("feature", StringType()),
     ]
 )
+
+
+# --------------------------------------------------------------------------
+# The per-row Arrow scaffold every synthesize_* / *_stats function shares
+# (the gapply / convert_to_pandas_udf pattern: adapt a per-row pure
+# function into one batched UDF). Each public function keeps only its
+# own part — the closed-form formula its oracle replays, or its decode
+# and reduce — and these two helpers own the batch loop, the output
+# frame and the ``rebalance_for_compute`` guard.
+# --------------------------------------------------------------------------
+
+
+def _synthesize(df: DataFrame, id_col: str, payload_of) -> DataFrame:
+    """The ``(doc_id long, payload binary)`` frame holding
+    ``payload_of(int(id)) -> bytes`` for every id of ``df[id_col]``,
+    built Arrow-batched inside the scan's partitions."""
+
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            ids = pdf[id_col].astype("int64")
+            payloads = [payload_of(int(i)) for i in ids]
+            yield pd.DataFrame(
+                {"doc_id": ids, "payload": pd.Series(payloads, dtype=object)}
+            )
+
+    return rebalance_for_compute(df.select(F.col(id_col))).mapInPandas(
+        gen, "doc_id long, payload binary"
+    )
+
+
+def _per_payload(
+    df: DataFrame,
+    row_of,
+    schema,
+    *,
+    id_col: str = "doc_id",
+    payload_col: str = "payload",
+    extra_cols: tuple[str, ...] = (),
+) -> DataFrame:
+    """One output row ``row_of(doc_id, payload_bytes, *extras) -> tuple``
+    per input row, where ``extras`` are the values of ``extra_cols``.
+    Column names come from ``schema`` (DDL string or StructType) and
+    every column is built with its declared type — nullable ``Int64``
+    for longs, so a row may carry NULL stats — on empty batches too.
+    Arrow-batched inside the scan's partitions, no shuffle."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    names = schema.fieldNames()
+    dtypes = [
+        "Int64" if isinstance(f.dataType, LongType) else object
+        for f in schema.fields
+    ]
+
+    def rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            more = [pdf[c] for c in extra_cols]
+            cells = zip(pdf[id_col], pdf[payload_col], *more)
+            out = [
+                row_of(int(doc_id), bytes(payload), *extras)
+                for doc_id, payload, *extras in cells
+            ]
+            cols = list(zip(*out)) or [()] * len(names)
+            yield pd.DataFrame(
+                {
+                    n: pd.Series(col, dtype=t)
+                    for n, col, t in zip(names, cols, dtypes)
+                }
+            )
+
+    return rebalance_for_compute(
+        df.select(F.col(id_col), F.col(payload_col), *extra_cols)
+    ).mapInPandas(rows, schema)
+
+
+def _pixel_grid(base: int, shape, steps, m: int = 256):
+    """Closed-form test pixels ``(base + r*dr + c*dc + ch*dch) % m`` over
+    an ``(h, w, n_ch)`` grid — the formula family the synthesizers'
+    oracles replay in SQL — as uint8, or uint16 when ``m > 256``."""
+    h, w, n_ch = shape
+    dr, dc, dch = steps
+    r = np.arange(h)[:, None, None]
+    c = np.arange(w)[None, :, None]
+    ch = np.arange(n_ch)[None, None, :]
+    px = (base + r * dr + c * dc + ch * dch) % m
+    return px.astype(np.uint16 if m > 256 else np.uint8)
+
+
+def _rgb_grid(i: int, side: int):
+    """The PPM/PNG test image: pixel (r, c) channel ch of image ``i`` is
+    ``(i*31 + r*7 + c*3 + ch) % 256``."""
+    return _pixel_grid(i * 31, (side, side, 3), (7, 3, 1))
+
+
+def _ramp_palette(n_colors: int, muls):
+    """Palette entry c = ``((c*m0)%256, (c*m1)%256, (c*m2)%256)``."""
+    c = np.arange(n_colors)
+    return np.stack([(c * m) % 256 for m in muls], axis=1).astype(np.uint8)
+
+
+def _tile_image(i: int, tiles, steps, crop):
+    """The JPEG exactness class (see the JPEG section header): a
+    ``tiles = (th, tw)`` grid of 8x8 tiles, tile (tr, tc) holding the
+    constant EVEN value ``2*((i*a + tr*b + tc*c) % 128)`` for
+    ``steps = (a, b, c)``, cropped by ``crop = (dh, dw)`` pixels so the
+    encoders' edge-replicate padding runs."""
+    (th, tw), (a, b, c) = tiles, steps
+    tr = np.arange(th)[:, None]
+    tc = np.arange(tw)[None, :]
+    grid = (2 * ((i * a + tr * b + tc * c) % 128)).astype(np.uint8)
+    img = np.kron(grid, np.ones((8, 8), dtype=np.uint8))
+    return img[: th * 8 - crop[0], : tw * 8 - crop[1]]
+
+
+def _gray_tile_jpeg(i: int) -> bytes:
+    """The c211 grayscale tile JPEG of image ``i``."""
+    return encode_jpeg_gray(
+        _tile_image(i, (1 + i % 3, 2 + i % 2), (31, 7, 3), (1, 3))
+    )
+
+
+_CHANNEL_SCHEMA = (
+    "doc_id long, width long, height long, n_channels long, "
+    "sum_r long, sum_g long, sum_b long, sum_a long, px_max long"
+)
+
+
+def _channel_row(doc_id: int, px) -> tuple:
+    """The ``_CHANNEL_SCHEMA`` row of a gray (h, w) or RGB/RGBA
+    (h, w, 3|4) pixel array: gray fills sum_r/g/b with its single
+    channel, and sum_a is 0 without alpha."""
+    arr = px.astype(np.int64)
+    if arr.ndim == 2:
+        s = int(arr.sum())
+        n_ch, sums = 1, (s, s, s, 0)
+    else:
+        n_ch = arr.shape[2]
+        sums = [int(arr[:, :, k].sum()) for k in range(3)]
+        sums.append(int(arr[:, :, 3].sum()) if n_ch == 4 else 0)
+    return (doc_id, px.shape[1], px.shape[0], n_ch, *sums, int(arr.max()))
+
+
+def _pcm_stats(pcm) -> tuple:
+    """``(n_samples, sum, sum_abs, min, max)`` of 1-D PCM samples as
+    exact integers. Real ingest can carry an empty frame: it gives an
+    honest zero-sample row with NULL stats instead of numpy's opaque
+    zero-size reduction error."""
+    v = pcm.astype(np.int64)
+    if v.size == 0:
+        return (0, None, None, None, None)
+    return (
+        v.size, int(v.sum()), int(np.abs(v).sum()), int(v.min()), int(v.max())
+    )
 
 
 def encode_ppm(pixels) -> bytes:
@@ -834,25 +993,12 @@ def extract_features(df: DataFrame, id_col: str = "doc_id", payload_col: str = "
     """
     import hashlib
 
-    def featurize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = pdf[payload_col]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "n_bytes": payloads.map(len).astype("int64"),
-                    "payload_md5": payloads.map(
-                        lambda b: hashlib.md5(bytes(b)).hexdigest()
-                    ),
-                    "head_hex": payloads.map(lambda b: bytes(b)[:8].hex()),
-                    "feature": payloads.map(lambda b: _fake_feature(bytes(b))),
-                }
-            )
+    def row(doc_id: int, b: bytes) -> tuple:
+        md5 = hashlib.md5(b).hexdigest()
+        return (doc_id, len(b), md5, b[:8].hex(), _fake_feature(b))
 
-    return rebalance_for_compute(
-        df.select(F.col(id_col), F.col(payload_col))
-    ).mapInPandas(
-        featurize, FEATURE_SCHEMA
+    return _per_payload(
+        df, row, FEATURE_SCHEMA, id_col=id_col, payload_col=payload_col
     )
 
 
@@ -925,23 +1071,7 @@ def synthesize_ppm_images(df: DataFrame, id_col: str, *, side: int = 8) -> DataF
     the encoder or decoder mangled a single byte, the channel sums
     would not match the formula's.
     """
-    import numpy as np
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        r = np.arange(side)[:, None, None]
-        c = np.arange(side)[None, :, None]
-        ch = np.arange(3)[None, None, :]
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = [
-                encode_ppm(((int(i) * 31 + r * 7 + c * 3 + ch) % 256).astype("uint8"))
-                for i in ids
-            ]
-            yield pd.DataFrame(
-                {"doc_id": ids, "payload": pd.Series(payloads, dtype=object)}
-            )
-
-    return rebalance_for_compute(df.select(F.col(id_col))).mapInPandas(gen, "doc_id long, payload binary")
+    return _synthesize(df, id_col, lambda i: encode_ppm(_rgb_grid(i, side)))
 
 
 def synthesize_png_images(df: DataFrame, id_col: str, *, side: int = 8) -> DataFrame:
@@ -950,23 +1080,7 @@ def synthesize_png_images(df: DataFrame, id_col: str, *, side: int = 8) -> DataF
     genuine zlib-compressed PNG bytes with the row filters cycling
     through all five types — so decoding exercises every unfilter
     path and the c64 channel-sum oracle replays unchanged."""
-    import numpy as np
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        r = np.arange(side)[:, None, None]
-        c = np.arange(side)[None, :, None]
-        ch = np.arange(3)[None, None, :]
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = [
-                encode_png(((int(i) * 31 + r * 7 + c * 3 + ch) % 256).astype("uint8"))
-                for i in ids
-            ]
-            yield pd.DataFrame(
-                {"doc_id": ids, "payload": pd.Series(payloads, dtype=object)}
-            )
-
-    return rebalance_for_compute(df.select(F.col(id_col))).mapInPandas(gen, "doc_id long, payload binary")
+    return _synthesize(df, id_col, lambda i: encode_png(_rgb_grid(i, side)))
 
 
 def synthesize_png_variant_images(
@@ -982,33 +1096,17 @@ def synthesize_png_variant_images(
     exact same colors — one oracle covers all four codecs. Default
     side=9 (not a multiple of 8) so every Adam7 pass hits a ragged
     edge."""
-    import numpy as np
+    i256 = np.arange(256)[:, None]
+    pal = ((i256 + np.arange(3)[None, :]) % 256).astype(np.uint8)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        r = np.arange(side)[:, None, None]
-        c = np.arange(side)[None, :, None]
-        ch = np.arange(3)[None, None, :]
-        i256 = np.arange(256)[:, None]
-        pal = ((i256 + np.arange(3)[None, :]) % 256).astype(np.uint8)
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                rgb = ((i * 31 + r * 7 + c * 3 + ch) % 256).astype("uint8")
-                variant = i % 4
-                if variant < 2:
-                    payloads.append(encode_png(rgb, interlace=variant == 1))
-                else:
-                    idx = rgb[:, :, 0]  # base channel IS the palette index
-                    payloads.append(
-                        encode_png_palette(idx, pal, interlace=variant == 3)
-                    )
-            yield pd.DataFrame(
-                {"doc_id": ids, "payload": pd.Series(payloads, dtype=object)}
-            )
+    def payload_of(i: int) -> bytes:
+        rgb = _rgb_grid(i, side)
+        if i % 4 < 2:
+            return encode_png(rgb, interlace=i % 4 == 1)
+        idx = rgb[:, :, 0]  # base channel IS the palette index
+        return encode_png_palette(idx, pal, interlace=i % 4 == 3)
 
-    return rebalance_for_compute(df.select(F.col(id_col))).mapInPandas(gen, "doc_id long, payload binary")
+    return _synthesize(df, id_col, payload_of)
 
 
 IMAGE_STATS_SCHEMA = (
@@ -1031,38 +1129,15 @@ def image_channel_stats(
     partitions — no shuffle, constant memory per batch; the integer
     sums keep the output engine-exact (no float accumulation).
     """
-    import numpy as np
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ws, hs, ns, sr, sg, sb = [], [], [], [], [], [], []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                arr = decode_image(bytes(payload))
-                h, w, _ = arr.shape
-                s = arr.reshape(-1, 3).astype(np.int64).sum(axis=0)
-                ids.append(int(doc_id))
-                ws.append(w)
-                hs.append(h)
-                ns.append(h * w)
-                sr.append(int(s[0]))
-                sg.append(int(s[1]))
-                sb.append(int(s[2]))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "width": pd.Series(ws, dtype="int64"),
-                    "height": pd.Series(hs, dtype="int64"),
-                    "n_pixels": pd.Series(ns, dtype="int64"),
-                    "sum_r": pd.Series(sr, dtype="int64"),
-                    "sum_g": pd.Series(sg, dtype="int64"),
-                    "sum_b": pd.Series(sb, dtype="int64"),
-                }
-            )
+    def row(doc_id: int, payload: bytes) -> tuple:
+        arr = decode_image(payload)
+        h, w, _ = arr.shape
+        s = arr.reshape(-1, 3).astype(np.int64).sum(axis=0)
+        return (doc_id, w, h, h * w, int(s[0]), int(s[1]), int(s[2]))
 
-    return rebalance_for_compute(
-        df.select(F.col(id_col), F.col(payload_col))
-    ).mapInPandas(
-        stats, IMAGE_STATS_SCHEMA
+    return _per_payload(
+        df, row, IMAGE_STATS_SCHEMA, id_col=id_col, payload_col=payload_col
     )
 
 
@@ -1093,35 +1168,13 @@ def resize_payload(
     import hashlib
     import math
 
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_ids, out_orig, out_n, out_md5, out_b = [], [], [], [], []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                b = bytes(payload)
-                if len(b) > target_bytes:
-                    k = math.ceil(len(b) / target_bytes)
-                    b2 = b[::k]
-                else:
-                    b2 = b
-                out_ids.append(int(doc_id))
-                out_orig.append(len(b))
-                out_n.append(len(b2))
-                out_md5.append(hashlib.md5(b2).hexdigest())
-                out_b.append(b2)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(out_ids, dtype="int64"),
-                    "orig_bytes": pd.Series(out_orig, dtype="int64"),
-                    "resized_bytes": pd.Series(out_n, dtype="int64"),
-                    "resized_md5": pd.Series(out_md5, dtype="object"),
-                    "resized": pd.Series(out_b, dtype="object"),
-                }
-            )
+    def row(doc_id: int, b: bytes) -> tuple:
+        k = math.ceil(len(b) / target_bytes) if len(b) > target_bytes else 1
+        b2 = b[::k]
+        return (doc_id, len(b), len(b2), hashlib.md5(b2).hexdigest(), b2)
 
-    return rebalance_for_compute(
-        df.select(F.col(id_col), F.col(payload_col))
-    ).mapInPandas(
-        resize, RESIZE_SCHEMA
+    return _per_payload(
+        df, row, RESIZE_SCHEMA, id_col=id_col, payload_col=payload_col
     )
 
 
@@ -1460,27 +1513,14 @@ def synthesize_wav_audio(
     ``((i*37 + s*11 + ch*5) % 65536) - 32768`` — full int16 range, a
     closed form an external engine replays without parsing bytes
     (the :func:`synthesize_ppm_images` contract, for audio)."""
-    import numpy as np
+    s = np.arange(n_samples)[:, None]
+    ch = np.arange(channels)[None, :]
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        s = np.arange(n_samples)[:, None]
-        ch = np.arange(channels)[None, :]
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = [
-                encode_wav(
-                    ((int(i) * 37 + s * 11 + ch * 5) % 65536 - 32768).astype(
-                        "<i2"
-                    ),
-                    sample_rate=sample_rate,
-                )
-                for i in ids
-            ]
-            yield pd.DataFrame(
-                {"doc_id": ids, "payload": pd.Series(payloads, dtype=object)}
-            )
+    def payload_of(i: int) -> bytes:
+        pcm = ((i * 37 + s * 11 + ch * 5) % 65536 - 32768).astype("<i2")
+        return encode_wav(pcm, sample_rate=sample_rate)
 
-    return rebalance_for_compute(df.select(F.col(id_col))).mapInPandas(gen, "doc_id long, payload binary")
+    return _synthesize(df, id_col, payload_of)
 
 
 def synthesize_pcm_variant_wavs(df: DataFrame, id_col: str) -> DataFrame:
@@ -1492,41 +1532,22 @@ def synthesize_pcm_variant_wavs(df: DataFrame, id_col: str) -> DataFrame:
     ``40 + id % 17`` frames. Lossless PCM → the c230 oracle replays
     decoded-domain sums arithmetically (8-bit decodes to
     ``(stored - 128) * 256``)."""
-    import numpy as np
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                n = 40 + i % 17
-                j = np.arange(n)[:, None]
-                if i % 3 == 0:
-                    arr = ((i * 13 + j * 7) % 256).astype(np.uint8)
-                    payloads.append(
-                        encode_wav_pcm(arr, bits=8, sample_rate=8000)
-                    )
-                elif i % 3 == 1:
-                    ch = np.arange(2)[None, :]
-                    arr = ((i * 29 + j * 11 + ch * 3) % 60000) - 30000
-                    payloads.append(
-                        encode_wav_pcm(
-                            arr.astype(np.int64), bits=16, sample_rate=16000
-                        )
-                    )
-                else:
-                    arr = ((i * 37 + j * 17) % 1000000) - 500000
-                    payloads.append(
-                        encode_wav_pcm(arr, bits=24, sample_rate=44100)
-                    )
-            yield pd.DataFrame(
-                {"doc_id": ids, "payload": pd.Series(payloads, dtype=object)}
+    def payload_of(i: int) -> bytes:
+        j = np.arange(40 + i % 17)[:, None]
+        if i % 3 == 0:
+            arr = ((i * 13 + j * 7) % 256).astype(np.uint8)
+            return encode_wav_pcm(arr, bits=8, sample_rate=8000)
+        if i % 3 == 1:
+            ch = np.arange(2)[None, :]
+            arr = ((i * 29 + j * 11 + ch * 3) % 60000) - 30000
+            return encode_wav_pcm(
+                arr.astype(np.int64), bits=16, sample_rate=16000
             )
+        arr = ((i * 37 + j * 17) % 1000000) - 500000
+        return encode_wav_pcm(arr, bits=24, sample_rate=44100)
 
-    return rebalance_for_compute(df.select(F.col(id_col))).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synthesize(df, id_col, payload_of)
 
 
 def wav_pcm_stats(
@@ -1537,37 +1558,22 @@ def wav_pcm_stats(
     and reduces to container fields plus exact integer sample stats
     over every channel. Arrow-batched ``mapInPandas`` inside the
     scan's partitions — no shuffle."""
-    import numpy as np
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {
-                k: []
-                for k in (
-                    "doc_id", "n_channels", "sample_rate", "n_samples",
-                    "sample_sum", "sample_min", "sample_max",
-                )
-            }
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                rate, ch, samples = decode_wav(bytes(payload))
-                v = samples.astype(np.int64)
-                rows["doc_id"].append(int(doc_id))
-                rows["n_channels"].append(ch)
-                rows["sample_rate"].append(rate)
-                rows["n_samples"].append(samples.shape[0])
-                rows["sample_sum"].append(int(v.sum()))
-                rows["sample_min"].append(int(v.min()))
-                rows["sample_max"].append(int(v.max()))
-            yield pd.DataFrame(
-                {k: pd.Series(vv, dtype="int64") for k, vv in rows.items()}
-            )
+    def row(doc_id: int, payload: bytes) -> tuple:
+        rate, ch, samples = decode_wav(payload)
+        v = samples.astype(np.int64)
+        return (
+            doc_id, ch, rate, samples.shape[0],
+            int(v.sum()), int(v.min()), int(v.max()),
+        )
 
-    return rebalance_for_compute(
-        df.select(F.col(id_col), F.col(payload_col))
-    ).mapInPandas(
-        stats,
+    return _per_payload(
+        df,
+        row,
         "doc_id long, n_channels long, sample_rate long, n_samples long, "
         "sample_sum long, sample_min long, sample_max long",
+        id_col=id_col,
+        payload_col=payload_col,
     )
 
 
@@ -1793,65 +1799,33 @@ def synthesize_bigendian_audio(df: DataFrame, id_col: str) -> DataFrame:
     @ 16 kHz (``((id*23 + j*19 + ch*3) % 60000) - 30000``), 4: AU
     mu-law mono @ 8 kHz (code bytes ``(id*7 + j*13) % 256``); length
     ``30 + id % 15`` frames."""
-    import numpy as np
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                n = 30 + i % 15
-                j = np.arange(n)[:, None]
-                v = i % 5
-                if v == 0:
-                    arr = (((i * 11 + j * 5) % 256) - 128).astype(np.int8)
-                    payloads.append(
-                        encode_aiff(arr, bits=8, sample_rate=8000)
-                    )
-                elif v == 1:
-                    ch = np.arange(2)[None, :]
-                    arr = ((i * 29 + j * 13 + ch * 7) % 60000) - 30000
-                    payloads.append(
-                        encode_aiff(
-                            arr.astype(np.int64), bits=16, sample_rate=44100
-                        )
-                    )
-                elif v == 2:
-                    arr = ((i * 31 + j * 17) % 1000000) - 500000
-                    payloads.append(
-                        encode_aiff(arr, bits=24, sample_rate=48000)
-                    )
-                elif v == 3:
-                    ch = np.arange(2)[None, :]
-                    arr = (
-                        ((i * 23 + j * 19 + ch * 3) % 60000) - 30000
-                    ).astype(">i2")
-                    payloads.append(
-                        encode_au(
-                            arr.tobytes(),
-                            encoding=3,
-                            sample_rate=16000,
-                            channels=2,
-                        )
-                    )
-                else:
-                    codes = ((i * 7 + j[:, 0] * 13) % 256).astype(np.uint8)
-                    payloads.append(
-                        encode_au(
-                            codes.tobytes(),
-                            encoding=1,
-                            sample_rate=8000,
-                            channels=1,
-                        )
-                    )
-            yield pd.DataFrame(
-                {"doc_id": ids, "payload": pd.Series(payloads, dtype=object)}
+    def payload_of(i: int) -> bytes:
+        j = np.arange(30 + i % 15)[:, None]
+        ch = np.arange(2)[None, :]
+        v = i % 5
+        if v == 0:
+            arr = (((i * 11 + j * 5) % 256) - 128).astype(np.int8)
+            return encode_aiff(arr, bits=8, sample_rate=8000)
+        if v == 1:
+            arr = ((i * 29 + j * 13 + ch * 7) % 60000) - 30000
+            return encode_aiff(
+                arr.astype(np.int64), bits=16, sample_rate=44100
             )
+        if v == 2:
+            arr = ((i * 31 + j * 17) % 1000000) - 500000
+            return encode_aiff(arr, bits=24, sample_rate=48000)
+        if v == 3:
+            arr = (((i * 23 + j * 19 + ch * 3) % 60000) - 30000).astype(">i2")
+            return encode_au(
+                arr.tobytes(), encoding=3, sample_rate=16000, channels=2
+            )
+        codes = ((i * 7 + j[:, 0] * 13) % 256).astype(np.uint8)
+        return encode_au(
+            codes.tobytes(), encoding=1, sample_rate=8000, channels=1
+        )
 
-    return rebalance_for_compute(df.select(F.col(id_col))).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synthesize(df, id_col, payload_of)
 
 
 def bigendian_audio_stats(
@@ -1861,50 +1835,29 @@ def bigendian_audio_stats(
     (``FORM`` → decode_aiff, ``.snd`` → decode_au) and reduce to
     container fields plus exact integer sample stats. Arrow-batched
     ``mapInPandas`` inside the scan's partitions — no shuffle."""
-    import numpy as np
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {
-                k: []
-                for k in (
-                    "doc_id", "container", "n_channels", "sample_rate",
-                    "n_samples", "sample_sum", "sample_min", "sample_max",
-                )
-            }
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                raw = bytes(payload)
-                if raw[:4] == b"FORM":
-                    container = "aiff"
-                    rate, ch, samples = decode_aiff(raw)
-                elif raw[:4] == b".snd":
-                    container = "au"
-                    rate, ch, samples = decode_au(raw)
-                else:
-                    raise ValueError("unknown audio container magic")
-                v = samples.astype(np.int64)
-                rows["doc_id"].append(int(doc_id))
-                rows["container"].append(container)
-                rows["n_channels"].append(ch)
-                rows["sample_rate"].append(rate)
-                rows["n_samples"].append(samples.shape[0])
-                rows["sample_sum"].append(int(v.sum()))
-                rows["sample_min"].append(int(v.min()) if v.size else None)
-                rows["sample_max"].append(int(v.max()) if v.size else None)
-            out = {
-                k: pd.Series(vv, dtype="object" if k == "container"
-                             else "int64")
-                for k, vv in rows.items()
-            }
-            yield pd.DataFrame(out)
+    def row(doc_id: int, raw: bytes) -> tuple:
+        if raw[:4] == b"FORM":
+            container, (rate, ch, samples) = "aiff", decode_aiff(raw)
+        elif raw[:4] == b".snd":
+            container, (rate, ch, samples) = "au", decode_au(raw)
+        else:
+            raise ValueError("unknown audio container magic")
+        v = samples.astype(np.int64)
+        return (
+            doc_id, container, ch, rate, samples.shape[0], int(v.sum()),
+            int(v.min()) if v.size else None,
+            int(v.max()) if v.size else None,
+        )
 
-    return rebalance_for_compute(
-        df.select(F.col(id_col), F.col(payload_col))
-    ).mapInPandas(
-        stats,
+    return _per_payload(
+        df,
+        row,
         "doc_id long, container string, n_channels long, "
         "sample_rate long, n_samples long, sample_sum long, "
         "sample_min long, sample_max long",
+        id_col=id_col,
+        payload_col=payload_col,
     )
 
 
@@ -1920,45 +1873,22 @@ def synthesize_wav_telephony(df: DataFrame, id_col: str) -> DataFrame:
     formulas / the stateful block decode as a recursive CTE."""
     import struct
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                variant = i % 3
-                if variant in (0, 1):
-                    n = 80 + i % 40
-                    data = bytes((i * 11 + k * 29) % 256 for k in range(n))
-                    payloads.append(
-                        encode_wav_telephony(data, 7 if variant == 0 else 6)
-                    )
-                else:
-                    n_nib = 60 + 2 * (i % 10)
-                    pred0 = (i * 37) % 1025 - 512
-                    idx0 = i % 89
-                    deltas = [
-                        (i * 13 + k * 7 + k * k) % 16 for k in range(n_nib)
-                    ]
-                    blob = struct.pack("<hBB", pred0, idx0, 0) + bytes(
-                        deltas[j] | (deltas[j + 1] << 4)  # LOW nibble first
-                        for j in range(0, n_nib, 2)
-                    )
-                    payloads.append(
-                        encode_wav_telephony(
-                            blob,
-                            0x11,
-                            samples_per_block=n_nib + 1,
-                            n_samples=n_nib + 1,
-                        )
-                    )
-            yield pd.DataFrame(
-                {"doc_id": ids, "payload": pd.Series(payloads, dtype=object)}
-            )
+    def payload_of(i: int) -> bytes:
+        if i % 3 in (0, 1):
+            data = bytes((i * 11 + k * 29) % 256 for k in range(80 + i % 40))
+            return encode_wav_telephony(data, 7 if i % 3 == 0 else 6)
+        n_nib = 60 + 2 * (i % 10)
+        pred0 = (i * 37) % 1025 - 512
+        deltas = [(i * 13 + k * 7 + k * k) % 16 for k in range(n_nib)]
+        blob = struct.pack("<hBB", pred0, i % 89, 0) + bytes(
+            deltas[j] | (deltas[j + 1] << 4)  # LOW nibble first
+            for j in range(0, n_nib, 2)
+        )
+        return encode_wav_telephony(
+            blob, 0x11, samples_per_block=n_nib + 1, n_samples=n_nib + 1
+        )
 
-    return rebalance_for_compute(df.select(F.col(id_col))).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synthesize(df, id_col, payload_of)
 
 
 def wav_telephony_stats(audio: DataFrame) -> DataFrame:
@@ -1966,35 +1896,14 @@ def wav_telephony_stats(audio: DataFrame) -> DataFrame:
     container-aware :func:`decode_wav` (G.711 laws and IMA-ADPCM
     blocks included) and reduce to exact integer statistics.
     Arrow-batched inside the scan's partitions — no shuffle."""
-    import numpy as np
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                rate, ch, samples = decode_wav(bytes(payload))
-                pcm = samples[:, 0].astype(np.int64)
-                rows.append(
-                    (
-                        int(doc_id),
-                        rate,
-                        pcm.size,
-                        int(pcm.sum()),
-                        int(np.abs(pcm).sum()),
-                        int(pcm.min()),
-                        int(pcm.max()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "sample_rate", "n_samples", "sum_pcm",
-                    "sum_abs", "min_pcm", "max_pcm",
-                ],
-            )
+    def row(doc_id: int, payload: bytes) -> tuple:
+        rate, _, samples = decode_wav(payload)
+        return (doc_id, rate, *_pcm_stats(samples[:, 0]))
 
-    return rebalance_for_compute(audio).mapInPandas(
-        stats,
+    return _per_payload(
+        audio,
+        row,
         "doc_id long, sample_rate long, n_samples long, sum_pcm long, "
         "sum_abs long, min_pcm long, max_pcm long",
     )
@@ -2015,32 +1924,19 @@ def audio_channel_stats(
     screen of an audio curation pipeline — silence and clipping both
     show up in these integers). 100 TB: Arrow-batched ``mapInPandas``
     inside the scan's partitions — no shuffle, constant memory."""
-    import numpy as np
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in (
-                "doc_id", "sample_rate", "n_channels", "n_samples",
-                "sum_ch0", "sum_ch1", "sum_abs",
-            )}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                rate, ch, samples = decode_wav(bytes(payload))
-                s64 = samples.astype(np.int64)
-                rows["doc_id"].append(int(doc_id))
-                rows["sample_rate"].append(rate)
-                rows["n_channels"].append(ch)
-                rows["n_samples"].append(samples.shape[0])
-                rows["sum_ch0"].append(int(s64[:, 0].sum()))
-                rows["sum_ch1"].append(int(s64[:, 1].sum()) if ch > 1 else 0)
-                rows["sum_abs"].append(int(np.abs(s64).sum()))
-            yield pd.DataFrame(
-                {k: pd.Series(v, dtype="int64") for k, v in rows.items()}
-            )
+    def row(doc_id: int, payload: bytes) -> tuple:
+        rate, ch, samples = decode_wav(payload)
+        s64 = samples.astype(np.int64)
+        return (
+            doc_id, rate, ch, samples.shape[0],
+            int(s64[:, 0].sum()),
+            int(s64[:, 1].sum()) if ch > 1 else 0,
+            int(np.abs(s64).sum()),
+        )
 
-    return rebalance_for_compute(
-        df.select(F.col(id_col), F.col(payload_col))
-    ).mapInPandas(
-        stats, AUDIO_STATS_SCHEMA
+    return _per_payload(
+        df, row, AUDIO_STATS_SCHEMA, id_col=id_col, payload_col=payload_col
     )
 
 
@@ -2217,68 +2113,21 @@ def synthesize_adpcm_audio(df: DataFrame, id_col: str) -> DataFrame:
     lets the c218 oracle regenerate the codes in SQL and replay the
     whole STATEFUL decode as a recursive CTE."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                n = 64 + 2 * (i % 16)
-                codes = [((i % 97) * (k + 1) + k * k) % 16 for k in range(n)]
-                payloads.append(
-                    bytes(
-                        (codes[j] << 4) | codes[j + 1]
-                        for j in range(0, n, 2)
-                    )
-                )
-            yield pd.DataFrame(
-                {"doc_id": ids, "payload": pd.Series(payloads, dtype=object)}
-            )
+    def payload_of(i: int) -> bytes:
+        n = 64 + 2 * (i % 16)
+        codes = [((i % 97) * (k + 1) + k * k) % 16 for k in range(n)]
+        return bytes((codes[j] << 4) | codes[j + 1] for j in range(0, n, 2))
 
-    return rebalance_for_compute(df.select(F.col(id_col))).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synthesize(df, id_col, payload_of)
 
 
 def adpcm_audio_stats(df: DataFrame) -> DataFrame:
     """Decode a (doc_id, payload) frame of IMA ADPCM audio to PCM16
     and reduce to exact integer statistics. Arrow-batched
     ``mapInPandas`` inside the scan's partitions — no shuffle."""
-    import numpy as np
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                pcm = decode_adpcm(bytes(payload)).astype(np.int64)
-                if pcm.size == 0:
-                    # real ingest can carry an empty frame; emit an
-                    # honest zero-sample row with NULL stats instead of
-                    # numpy's opaque zero-size reduction error
-                    rows.append((int(doc_id), 0, None, None, None, None))
-                    continue
-                rows.append(
-                    (
-                        int(doc_id),
-                        pcm.size,
-                        int(pcm.sum()),
-                        int(np.abs(pcm).sum()),
-                        int(pcm.min()),
-                        int(pcm.max()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "n_samples", "sum_pcm",
-                    "sum_abs", "min_pcm", "max_pcm",
-                ],
-            ).astype(
-                {c: "Int64" for c in ("sum_pcm", "sum_abs", "min_pcm", "max_pcm")}
-            )
-
-    return rebalance_for_compute(df).mapInPandas(
-        stats,
+    return _per_payload(
+        df,
+        lambda doc_id, payload: (doc_id, *_pcm_stats(decode_adpcm(payload))),
         "doc_id long, n_samples long, sum_pcm long, "
         "sum_abs long, min_pcm long, max_pcm long",
     )
@@ -2291,29 +2140,14 @@ def synthesize_g711_audio(df: DataFrame, id_col: str) -> DataFrame:
     ARE the payload (byte-per-sample telephony framing), so the c217
     oracle regenerates them in SQL and replays the integer decode
     formulas exactly."""
-    import numpy as np
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            laws, payloads = [], []
-            for i in ids:
-                i = int(i)
-                k = np.arange(96 + i % 32, dtype=np.int64)
-                payloads.append(((i * 7 + k * 13) % 256).astype(
-                    np.uint8
-                ).tobytes())
-                laws.append("ulaw" if i % 2 == 0 else "alaw")
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "law": pd.Series(laws, dtype=object),
-                    "payload": pd.Series(payloads, dtype=object),
-                }
-            )
+    def payload_of(i: int) -> bytes:
+        k = np.arange(96 + i % 32, dtype=np.int64)
+        return ((i * 7 + k * 13) % 256).astype(np.uint8).tobytes()
 
-    return rebalance_for_compute(df.select(F.col(id_col))).mapInPandas(
-        gen, "doc_id long, law string, payload binary"
+    law = F.when(F.col("doc_id") % 2 == 0, "ulaw").otherwise("alaw")
+    return _synthesize(df, id_col, payload_of).select(
+        "doc_id", law.alias("law"), "payload"
     )
 
 
@@ -2322,47 +2156,17 @@ def g711_audio_stats(df: DataFrame) -> DataFrame:
     to PCM16 and reduce to exact integer statistics — the loudness/
     energy screen over compressed call audio. 100 TB: Arrow-batched
     ``mapInPandas`` inside the scan's partitions, no shuffle."""
-    import numpy as np
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, law, payload in zip(
-                pdf["doc_id"], pdf["law"], pdf["payload"]
-            ):
-                dec = decode_mulaw if law == "ulaw" else decode_alaw
-                pcm = dec(bytes(payload)).astype(np.int64)
-                if pcm.size == 0:
-                    # real ingest can carry an empty frame; emit an
-                    # honest zero-sample row with NULL stats instead of
-                    # numpy's opaque zero-size reduction error
-                    rows.append((int(doc_id), law, 0, None, None, None, None))
-                    continue
-                rows.append(
-                    (
-                        int(doc_id),
-                        law,
-                        pcm.size,
-                        int(pcm.sum()),
-                        int(np.abs(pcm).sum()),
-                        int(pcm.min()),
-                        int(pcm.max()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "law", "n_samples", "sum_pcm",
-                    "sum_abs", "min_pcm", "max_pcm",
-                ],
-            ).astype(
-                {c: "Int64" for c in ("sum_pcm", "sum_abs", "min_pcm", "max_pcm")}
-            )
+    def row(doc_id: int, payload: bytes, law: str) -> tuple:
+        dec = decode_mulaw if law == "ulaw" else decode_alaw
+        return (doc_id, law, *_pcm_stats(dec(payload)))
 
-    return rebalance_for_compute(df).mapInPandas(
-        stats,
+    return _per_payload(
+        df,
+        row,
         "doc_id long, law string, n_samples long, sum_pcm long, "
         "sum_abs long, min_pcm long, max_pcm long",
+        extra_cols=("law",),
     )
 
 
@@ -2799,25 +2603,14 @@ def synthesize_gif_images(
     so an external engine replays the decoded channel sums without
     parsing a byte (the synthesize_ppm/png/wav contract, for GIF —
     but here the payload really is LZW-compressed)."""
-    import numpy as np
+    y = np.arange(side)[:, None]
+    x = np.arange(side)[None, :]
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        y = np.arange(side)[:, None]
-        x = np.arange(side)[None, :]
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = [
-                encode_gif(
-                    ((int(i) * 7 + y * 5 + x * 3) % n_colors).astype("uint8"),
-                    n_colors=n_colors,
-                )
-                for i in ids
-            ]
-            yield pd.DataFrame(
-                {"doc_id": ids, "payload": pd.Series(payloads, dtype=object)}
-            )
+    def payload_of(i: int) -> bytes:
+        idx = ((i * 7 + y * 5 + x * 3) % n_colors).astype("uint8")
+        return encode_gif(idx, n_colors=n_colors)
 
-    return rebalance_for_compute(df.select(F.col(id_col))).mapInPandas(gen, "doc_id long, payload binary")
+    return _synthesize(df, id_col, payload_of)
 
 
 def synthesize_gif_animations(df: DataFrame, id_col: str) -> DataFrame:
@@ -2829,40 +2622,25 @@ def synthesize_gif_animations(df: DataFrame, id_col: str) -> DataFrame:
     disposal 1 (do not dispose), Netscape loop count ``i % 4``. The
     closed forms are what let the c222 oracle replay the disposal-1
     compositing (last opaque frame wins per pixel) in SQL."""
-    import numpy as np
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                nf = 2 + i % 3
-                h, w = 5 + i % 4, 6 + i % 3
-                r = np.arange(h)[:, None]
-                c = np.arange(w)[None, :]
-                frames = [
-                    ((i * 31 + r * 5 + c * 3 + f * 7) % 16).astype(np.uint8)
-                    for f in range(nf)
-                ]
-                payloads.append(
-                    encode_gif89a(
-                        frames,
-                        n_colors=16,
-                        delays=[(i + 3 * f) % 50 + 2 for f in range(nf)],
-                        transparents=[None]
-                        + [(i + f) % 16 for f in range(1, nf)],
-                        disposals=[1] * nf,
-                        loop=i % 4,
-                    )
-                )
-            yield pd.DataFrame(
-                {"doc_id": ids, "payload": pd.Series(payloads, dtype=object)}
-            )
+    def payload_of(i: int) -> bytes:
+        nf = 2 + i % 3
+        r = np.arange(5 + i % 4)[:, None]
+        c = np.arange(6 + i % 3)[None, :]
+        frames = [
+            ((i * 31 + r * 5 + c * 3 + f * 7) % 16).astype(np.uint8)
+            for f in range(nf)
+        ]
+        return encode_gif89a(
+            frames,
+            n_colors=16,
+            delays=[(i + 3 * f) % 50 + 2 for f in range(nf)],
+            transparents=[None] + [(i + f) % 16 for f in range(1, nf)],
+            disposals=[1] * nf,
+            loop=i % 4,
+        )
 
-    return rebalance_for_compute(df.select(F.col(id_col))).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synthesize(df, id_col, payload_of)
 
 
 def gif_animation_stats(images: DataFrame) -> DataFrame:
@@ -2873,39 +2651,24 @@ def gif_animation_stats(images: DataFrame) -> DataFrame:
     frame-over-frame disposal semantics, not just the last raw
     frame). Arrow-batched decode inside the scan's partitions — no
     shuffle."""
-    import numpy as np
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                canvases, meta, loop = decode_gif_animation(bytes(payload))
-                final = canvases[-1].astype(np.int64)
-                rows.append(
-                    (
-                        int(doc_id),
-                        len(canvases),
-                        final.shape[1],
-                        final.shape[0],
-                        sum(m["delay"] for m in meta),
-                        sum(m["n_transparent"] for m in meta),
-                        loop if loop is not None else -1,
-                        int(final[:, :, 0].sum()),
-                        int(final[:, :, 1].sum()),
-                        int(final[:, :, 2].sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "n_frames", "width", "height",
-                    "total_delay", "n_transparent", "n_loops",
-                    "sum_r", "sum_g", "sum_b",
-                ],
-            )
+    def row(doc_id: int, payload: bytes) -> tuple:
+        canvases, meta, loop = decode_gif_animation(payload)
+        final = canvases[-1].astype(np.int64)
+        return (
+            doc_id,
+            len(canvases),
+            final.shape[1],
+            final.shape[0],
+            sum(m["delay"] for m in meta),
+            sum(m["n_transparent"] for m in meta),
+            loop if loop is not None else -1,
+            *(int(final[:, :, k].sum()) for k in range(3)),
+        )
 
-    return rebalance_for_compute(images).mapInPandas(
-        stats,
+    return _per_payload(
+        images,
+        row,
         "doc_id long, n_frames long, width long, height long, "
         "total_delay long, n_transparent long, n_loops long, "
         "sum_r long, sum_g long, sum_b long",
@@ -3026,31 +2789,17 @@ def synthesize_bmp_images(
     8-bit PALETTIZED bottom-up, odd ids 24-bit TRUE-COLOR top-down
     (negative height) — one fixture drives both branches plus the
     4-byte row padding (w=6: 18- and 6-byte rows both pad by 2)."""
-    import numpy as np
+    y = np.arange(h)[:, None]
+    x = np.arange(w)[None, :]
+    pal = _ramp_palette(n_colors, (5, 9, 13))
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        y = np.arange(h)[:, None]
-        x = np.arange(w)[None, :]
-        c = np.arange(n_colors)
-        pal = np.stack(
-            [(c * 5) % 256, (c * 9) % 256, (c * 13) % 256], axis=1
-        ).astype(np.uint8)
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                idx = ((int(i) * 13 + y * 3 + x * 7) % n_colors).astype(
-                    np.uint8
-                )
-                if int(i) % 2 == 0:
-                    payloads.append(encode_bmp_palette(idx, pal))
-                else:
-                    payloads.append(encode_bmp(pal[idx], topdown=True))
-            yield pd.DataFrame(
-                {"doc_id": ids, "payload": pd.Series(payloads, dtype=object)}
-            )
+    def payload_of(i: int) -> bytes:
+        idx = ((i * 13 + y * 3 + x * 7) % n_colors).astype(np.uint8)
+        if i % 2 == 0:
+            return encode_bmp_palette(idx, pal)
+        return encode_bmp(pal[idx], topdown=True)
 
-    return rebalance_for_compute(df.select(F.col(id_col))).mapInPandas(gen, "doc_id long, payload binary")
+    return _synthesize(df, id_col, payload_of)
 
 
 # --------------------------------------------------------------------------
@@ -3196,32 +2945,20 @@ def synthesize_qoi_images(
     color ``k = (i*13 + y*3 + (x DIV 4)*7) % 16`` mapped through
     ``((k*5)%256, (k*9)%256, (k*13)%256)`` (runs → QOI_OP_RUN,
     revisits → QOI_OP_INDEX, jumps → RGB/LUMA)."""
-    import numpy as np
+    xs = np.arange(w)
+    gradient = np.array([7, 11, 13])[None, :]
+    pal = _ramp_palette(16, (5, 9, 13))
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        xs = np.arange(w)
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                img = np.zeros((h, w, 3), dtype=np.uint8)
-                for y in range(h):
-                    if y % 2 == 0:
-                        img[y, :, 0] = (i * 7 + xs) % 256
-                        img[y, :, 1] = (i * 11 + xs) % 256
-                        img[y, :, 2] = (i * 13 + xs) % 256
-                    else:
-                        k = (i * 13 + y * 3 + (xs // 4) * 7) % 16
-                        img[y, :, 0] = (k * 5) % 256
-                        img[y, :, 1] = (k * 9) % 256
-                        img[y, :, 2] = (k * 13) % 256
-                payloads.append(encode_qoi(img))
-            yield pd.DataFrame(
-                {"doc_id": ids, "payload": pd.Series(payloads, dtype=object)}
-            )
+    def payload_of(i: int) -> bytes:
+        img = np.zeros((h, w, 3), dtype=np.uint8)
+        for y in range(h):
+            if y % 2 == 0:
+                img[y] = (i * gradient + xs[:, None]) % 256
+            else:
+                img[y] = pal[(i * 13 + y * 3 + (xs // 4) * 7) % 16]
+        return encode_qoi(img)
 
-    return rebalance_for_compute(df.select(F.col(id_col))).mapInPandas(gen, "doc_id long, payload binary")
+    return _synthesize(df, id_col, payload_of)
 
 
 # --------------------------------------------------------------------------
@@ -3354,33 +3091,16 @@ def synthesize_tga_images(
     Even ids encode type 2 (uncompressed, bottom-up), odd ids type 10
     (RLE, top-down) — one fixture drives both pixel paths, both row
     orders, and both packet kinds."""
-    import numpy as np
+    y = np.arange(h)[:, None]
+    x = np.arange(w)[None, :]
+    pal = _ramp_palette(n_colors, (7, 11, 3))
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        y = np.arange(h)[:, None]
-        x = np.arange(w)[None, :]
-        c = np.arange(n_colors)
-        pal = np.stack(
-            [(c * 7) % 256, (c * 11) % 256, (c * 3) % 256], axis=1
-        ).astype(np.uint8)
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                idx = (
-                    (int(i) * 11 + y * 5 + (x // 4) * 3) % n_colors
-                ).astype(np.uint8)
-                if int(i) % 2 == 0:
-                    payloads.append(encode_tga(pal[idx]))
-                else:
-                    payloads.append(
-                        encode_tga(pal[idx], rle=True, topdown=True)
-                    )
-            yield pd.DataFrame(
-                {"doc_id": ids, "payload": pd.Series(payloads, dtype=object)}
-            )
+    def payload_of(i: int) -> bytes:
+        idx = ((i * 11 + y * 5 + (x // 4) * 3) % n_colors).astype(np.uint8)
+        odd = i % 2 == 1
+        return encode_tga(pal[idx], rle=odd, topdown=odd)
 
-    return rebalance_for_compute(df.select(F.col(id_col))).mapInPandas(gen, "doc_id long, payload binary")
+    return _synthesize(df, id_col, payload_of)
 
 
 # ---------------------------------------------------------------------------
@@ -3830,35 +3550,17 @@ def synthesize_tiff_images(df: DataFrame, id_col: str) -> DataFrame:
     (M = 65536 for the 16-bit variant, else 256) — both byte orders,
     alpha, and both depths. Lossless, so the c220 oracle replays the
     closed form in SQL."""
-    import numpy as np
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                h, w = 4 + i % 5, 5 + i % 4
-                variant = i % 4
-                n_ch = (1, 3, 4, 3)[variant]
-                m = 65536 if variant == 3 else 256
-                dt = np.uint16 if m == 65536 else np.uint8
-                r = np.arange(h)[:, None, None]
-                c = np.arange(w)[None, :, None]
-                ch = np.arange(n_ch)[None, None, :]
-                px = ((i * 151 + r * 13 + c * 11 + ch * 5) % m).astype(dt)
-                if n_ch == 1:
-                    px = px[:, :, 0]
-                payloads.append(
-                    encode_tiff(px, big_endian=variant in (1, 3))
-                )
-            yield pd.DataFrame(
-                {"doc_id": ids, "payload": pd.Series(payloads, dtype=object)}
-            )
+    def payload_of(i: int) -> bytes:
+        variant = i % 4
+        m = 65536 if variant == 3 else 256
+        shape = (4 + i % 5, 5 + i % 4, (1, 3, 4, 3)[variant])
+        px = _pixel_grid(i * 151, shape, (13, 11, 5), m)
+        if variant == 0:
+            px = px[:, :, 0]
+        return encode_tiff(px, big_endian=variant in (1, 3))
 
-    return rebalance_for_compute(df.select(F.col(id_col))).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synthesize(df, id_col, payload_of)
 
 
 def synthesize_tiff_compressed_images(df: DataFrame, id_col: str) -> DataFrame:
@@ -3871,44 +3573,26 @@ def synthesize_tiff_compressed_images(df: DataFrame, id_col: str) -> DataFrame:
     ``(id*157 + r*17 + c*7 + ch*3) % M``. Both compressions are
     lossless, so the c221 oracle replays the closed pixel forms in
     SQL exactly as c220 does for the uncompressed baseline."""
-    import numpy as np
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                h, w = 6 + i % 6, 5 + i % 5
-                variant = i % 4
-                n_ch = (1, 3, 4, 3)[variant]
-                m = 65536 if variant == 3 else 256
-                dt = np.uint16 if m == 65536 else np.uint8
-                r = np.arange(h)[:, None, None]
-                c = np.arange(w)[None, :, None]
-                ch = np.arange(n_ch)[None, None, :]
-                if variant == 0:
-                    px = ((i * 157 + r * 17 + (c // 3) * 21) % 256).astype(dt)
-                else:
-                    px = ((i * 157 + r * 17 + c * 7 + ch * 3) % m).astype(dt)
-                if n_ch == 1:
-                    px = px[:, :, 0]
-                comp = ("packbits", "lzw", "lzw", "deflate")[variant]
-                payloads.append(
-                    encode_tiff(
-                        px,
-                        big_endian=variant in (1, 3),
-                        compression=comp,
-                        predictor=variant == 2,
-                    )
-                )
-            yield pd.DataFrame(
-                {"doc_id": ids, "payload": pd.Series(payloads, dtype=object)}
-            )
+    def payload_of(i: int) -> bytes:
+        variant = i % 4
+        h, w = 6 + i % 6, 5 + i % 5
+        if variant == 0:
+            r = np.arange(h)[:, None]
+            c = np.arange(w)[None, :]
+            px = ((i * 157 + r * 17 + (c // 3) * 21) % 256).astype(np.uint8)
+        else:
+            m = 65536 if variant == 3 else 256
+            n_ch = (1, 3, 4, 3)[variant]
+            px = _pixel_grid(i * 157, (h, w, n_ch), (17, 7, 3), m)
+        return encode_tiff(
+            px,
+            big_endian=variant in (1, 3),
+            compression=("packbits", "lzw", "lzw", "deflate")[variant],
+            predictor=variant == 2,
+        )
 
-    return rebalance_for_compute(df.select(F.col(id_col))).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synthesize(df, id_col, payload_of)
 
 
 def tiff_image_stats(images: DataFrame) -> DataFrame:
@@ -3916,48 +3600,10 @@ def tiff_image_stats(images: DataFrame) -> DataFrame:
     exact integer per-channel statistics (gray fills sum_r/g/b with
     the single channel; sum_a is 0 without alpha). Arrow-batched
     decode inside the scan's partitions — no shuffle."""
-    import numpy as np
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                px = decode_tiff(bytes(payload))
-                arr = px.astype(np.int64)
-                if arr.ndim == 2:
-                    s = int(arr.sum())
-                    sums = (s, s, s, 0)
-                    n_ch = 1
-                else:
-                    n_ch = arr.shape[2]
-                    sums = (
-                        int(arr[:, :, 0].sum()),
-                        int(arr[:, :, 1].sum()),
-                        int(arr[:, :, 2].sum()),
-                        int(arr[:, :, 3].sum()) if n_ch == 4 else 0,
-                    )
-                rows.append(
-                    (
-                        int(doc_id),
-                        px.shape[1],
-                        px.shape[0],
-                        n_ch,
-                        *sums,
-                        int(arr.max()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "n_channels",
-                    "sum_r", "sum_g", "sum_b", "sum_a", "px_max",
-                ],
-            )
-
-    return rebalance_for_compute(images).mapInPandas(
-        stats,
-        "doc_id long, width long, height long, n_channels long, "
-        "sum_r long, sum_g long, sum_b long, sum_a long, px_max long",
+    return _per_payload(
+        images,
+        lambda doc_id, payload: _channel_row(doc_id, decode_tiff(payload)),
+        _CHANNEL_SCHEMA,
     )
 
 
@@ -5539,31 +5185,7 @@ def synthesize_jpeg_images(df: DataFrame, id_col: str) -> DataFrame:
     round-trip bit-exactly through the lossy codec (see the module
     section header), so an external engine can replay the decoded
     pixel statistics from the closed form without parsing a byte."""
-    import numpy as np
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                th, tw = 1 + i % 3, 2 + i % 2
-                tr = np.arange(th)[:, None]
-                tc = np.arange(tw)[None, :]
-                tiles = (2 * ((i * 31 + tr * 7 + tc * 3) % 128)).astype(
-                    np.uint8
-                )
-                img = np.kron(tiles, np.ones((8, 8), dtype=np.uint8))
-                payloads.append(
-                    encode_jpeg_gray(img[: th * 8 - 1, : tw * 8 - 3])
-                )
-            yield pd.DataFrame(
-                {"doc_id": ids, "payload": pd.Series(payloads, dtype=object)}
-            )
-
-    return rebalance_for_compute(df.select(F.col(id_col))).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synthesize(df, id_col, _gray_tile_jpeg)
 
 
 def synthesize_color_jpeg_images(df: DataFrame, id_col: str) -> DataFrame:
@@ -5578,32 +5200,12 @@ def synthesize_color_jpeg_images(df: DataFrame, id_col: str) -> DataFrame:
     float rounding — the chroma blocks quantize to exactly zero and
     the lossy color codec round-trips bit-identically, so per-channel
     stats replay from the closed tile form in SQL."""
-    import numpy as np
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                th, tw = 1 + i % 3, 2 + i % 2
-                tr = np.arange(th)[:, None]
-                tc = np.arange(tw)[None, :]
-                tiles = (2 * ((i * 37 + tr * 11 + tc * 5) % 128)).astype(
-                    np.uint8
-                )
-                img = np.kron(tiles, np.ones((8, 8), dtype=np.uint8))
-                img = img[: th * 8 - 2, : tw * 8 - 1]
-                payloads.append(
-                    encode_jpeg_color(np.stack([img, img, img], axis=-1))
-                )
-            yield pd.DataFrame(
-                {"doc_id": ids, "payload": pd.Series(payloads, dtype=object)}
-            )
+    def payload_of(i: int) -> bytes:
+        img = _tile_image(i, (1 + i % 3, 2 + i % 2), (37, 11, 5), (2, 1))
+        return encode_jpeg_color(np.stack([img, img, img], axis=-1))
 
-    return rebalance_for_compute(df.select(F.col(id_col))).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synthesize(df, id_col, payload_of)
 
 
 def synthesize_subsampled_jpeg_images(
@@ -5622,35 +5224,15 @@ def synthesize_subsampled_jpeg_images(
     upsampling of zero is zero — so subsampling is LOSSLESS on this
     class and the decoded per-channel stats replay from the closed
     tile form in SQL (the c214 oracle)."""
-    import numpy as np
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                th, tw = 1 + i % 3, 2 + i % 2
-                tr = np.arange(th)[:, None]
-                tc = np.arange(tw)[None, :]
-                tiles = (2 * ((i * 41 + tr * 13 + tc * 7) % 128)).astype(
-                    np.uint8
-                )
-                img = np.kron(tiles, np.ones((8, 8), dtype=np.uint8))
-                img = img[: th * 8 - 1, : tw * 8 - 2]
-                payloads.append(
-                    encode_jpeg_color(
-                        np.stack([img, img, img], axis=-1),
-                        sampling="420" if i % 2 == 0 else "422",
-                    )
-                )
-            yield pd.DataFrame(
-                {"doc_id": ids, "payload": pd.Series(payloads, dtype=object)}
-            )
+    def payload_of(i: int) -> bytes:
+        img = _tile_image(i, (1 + i % 3, 2 + i % 2), (41, 13, 7), (1, 2))
+        return encode_jpeg_color(
+            np.stack([img, img, img], axis=-1),
+            sampling="420" if i % 2 == 0 else "422",
+        )
 
-    return rebalance_for_compute(df.select(F.col(id_col))).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synthesize(df, id_col, payload_of)
 
 
 def synthesize_restart_jpeg_images(df: DataFrame, id_col: str) -> DataFrame:
@@ -5668,36 +5250,16 @@ def synthesize_restart_jpeg_images(df: DataFrame, id_col: str) -> DataFrame:
     cropped to (tiles_h*8 - 1, tiles_w*8 - 2), round-trips
     bit-identically, so per-channel stats replay from the closed
     tile form in SQL (the c215 oracle)."""
-    import numpy as np
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                th, tw = 2 + i % 3, 3 + i % 2
-                tr = np.arange(th)[:, None]
-                tc = np.arange(tw)[None, :]
-                tiles = (2 * ((i * 43 + tr * 17 + tc * 9) % 128)).astype(
-                    np.uint8
-                )
-                img = np.kron(tiles, np.ones((8, 8), dtype=np.uint8))
-                img = img[: th * 8 - 1, : tw * 8 - 2]
-                payloads.append(
-                    encode_jpeg_color(
-                        np.stack([img, img, img], axis=-1),
-                        sampling=("444", "422", "420")[i % 3],
-                        restart_interval=1 + i % 2,
-                    )
-                )
-            yield pd.DataFrame(
-                {"doc_id": ids, "payload": pd.Series(payloads, dtype=object)}
-            )
+    def payload_of(i: int) -> bytes:
+        img = _tile_image(i, (2 + i % 3, 3 + i % 2), (43, 17, 9), (1, 2))
+        return encode_jpeg_color(
+            np.stack([img, img, img], axis=-1),
+            sampling=("444", "422", "420")[i % 3],
+            restart_interval=1 + i % 2,
+        )
 
-    return rebalance_for_compute(df.select(F.col(id_col))).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synthesize(df, id_col, payload_of)
 
 
 def synthesize_progressive_jpeg_images(
@@ -5715,35 +5277,15 @@ def synthesize_progressive_jpeg_images(
     bit-identically through the multi-scan pipeline and per-channel
     stats replay from the closed tile form in SQL (the c216
     oracle)."""
-    import numpy as np
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                th, tw = 1 + i % 4, 2 + i % 3
-                tr = np.arange(th)[:, None]
-                tc = np.arange(tw)[None, :]
-                tiles = (
-                    2 * ((i * 47 + tr * 19 + tc * 11) % 128)
-                ).astype(np.uint8)
-                img = np.kron(tiles, np.ones((8, 8), dtype=np.uint8))
-                img = img[: th * 8 - 3, : tw * 8 - 1]
-                payloads.append(
-                    encode_jpeg_progressive(
-                        np.stack([img, img, img], axis=-1),
-                        sampling=("444", "422", "420")[i % 3],
-                    )
-                )
-            yield pd.DataFrame(
-                {"doc_id": ids, "payload": pd.Series(payloads, dtype=object)}
-            )
+    def payload_of(i: int) -> bytes:
+        img = _tile_image(i, (1 + i % 4, 2 + i % 3), (47, 19, 11), (3, 1))
+        return encode_jpeg_progressive(
+            np.stack([img, img, img], axis=-1),
+            sampling=("444", "422", "420")[i % 3],
+        )
 
-    return rebalance_for_compute(df.select(F.col(id_col))).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synthesize(df, id_col, payload_of)
 
 
 def build_exif_app1(
@@ -5919,35 +5461,16 @@ def synthesize_exif_jpeg_images(df: DataFrame, id_col: str) -> DataFrame:
     in: orientation ``1 + id % 8`` (all eight states), TIFF byte order
     ``II`` for even ids / ``MM`` for odd, and an out-of-line
     ImageDescription carrying ``doc <id>``."""
-    import numpy as np
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                th, tw = 1 + i % 3, 2 + i % 2
-                tr = np.arange(th)[:, None]
-                tc = np.arange(tw)[None, :]
-                tiles = (2 * ((i * 31 + tr * 7 + tc * 3) % 128)).astype(
-                    np.uint8
-                )
-                img = np.kron(tiles, np.ones((8, 8), dtype=np.uint8))
-                jp = encode_jpeg_gray(img[: th * 8 - 1, : tw * 8 - 3])
-                app1 = build_exif_app1(
-                    1 + i % 8,
-                    byte_order="II" if i % 2 == 0 else "MM",
-                    description=f"doc {i}",
-                )
-                payloads.append(inject_exif(jp, app1))
-            yield pd.DataFrame(
-                {"doc_id": ids, "payload": pd.Series(payloads, dtype=object)}
-            )
+    def payload_of(i: int) -> bytes:
+        app1 = build_exif_app1(
+            1 + i % 8,
+            byte_order="II" if i % 2 == 0 else "MM",
+            description=f"doc {i}",
+        )
+        return inject_exif(_gray_tile_jpeg(i), app1)
 
-    return rebalance_for_compute(df.select(F.col(id_col))).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synthesize(df, id_col, payload_of)
 
 
 def exif_image_stats(
@@ -5958,39 +5481,22 @@ def exif_image_stats(
     UPRIGHT dimensions + top-left pixel (orientation-sensitive) and
     the pixel sum (rotation-invariant — the cross-check). Arrow-batched
     ``mapInPandas`` inside the scan's partitions — no shuffle."""
-    import numpy as np
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {
-                k: []
-                for k in (
-                    "doc_id", "orientation", "width", "height",
-                    "topleft", "pixel_sum",
-                )
-            }
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                raw = bytes(payload)
-                meta = parse_exif(raw)
-                px = apply_exif_orientation(
-                    decode_jpeg_gray(raw), meta["orientation"]
-                )
-                rows["doc_id"].append(int(doc_id))
-                rows["orientation"].append(meta["orientation"])
-                rows["width"].append(px.shape[1])
-                rows["height"].append(px.shape[0])
-                rows["topleft"].append(int(px[0, 0]))
-                rows["pixel_sum"].append(int(px.astype(np.int64).sum()))
-            yield pd.DataFrame(
-                {k: pd.Series(vv, dtype="int64") for k, vv in rows.items()}
-            )
+    def row(doc_id: int, raw: bytes) -> tuple:
+        orientation = parse_exif(raw)["orientation"]
+        px = apply_exif_orientation(decode_jpeg_gray(raw), orientation)
+        return (
+            doc_id, orientation, px.shape[1], px.shape[0],
+            int(px[0, 0]), int(px.astype(np.int64).sum()),
+        )
 
-    return rebalance_for_compute(
-        df.select(F.col(id_col), F.col(payload_col))
-    ).mapInPandas(
-        stats,
+    return _per_payload(
+        df,
+        row,
         "doc_id long, orientation long, width long, height long, "
         "topleft long, pixel_sum long",
+        id_col=id_col,
+        payload_col=payload_col,
     )
 
 
@@ -6009,46 +5515,20 @@ def synthesize_cmyk_jpeg_images(df: DataFrame, id_col: str) -> DataFrame:
     box-averages and replication-upsamples to zero) — so both
     transforms round-trip bit-identically and per-channel ink sums
     replay from the closed tile form in SQL (the c226 oracle)."""
-    import numpy as np
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                th, tw = 2 + i % 2, 2 + i % 3
-                tr = np.arange(th)[:, None]
-                tc = np.arange(tw)[None, :]
-                cmy = (
-                    2 * ((i * 47 + tr * 19 + tc * 11) % 128) + 1
-                ).astype(np.uint8)
-                kk = (
-                    2 * ((i * 53 + tr * 7 + tc * 3) % 128) + 1
-                ).astype(np.uint8)
-                ones = np.ones((8, 8), dtype=np.uint8)
-                cmy_img = np.kron(cmy, ones)
-                k_img = np.kron(kk, ones)
-                img = np.stack(
-                    [cmy_img, cmy_img, cmy_img, k_img], axis=-1
-                )[: th * 8 - 1, : tw * 8 - 2]
-                if i % 2 == 0:
-                    payloads.append(encode_jpeg_cmyk(img))
-                else:
-                    payloads.append(
-                        encode_jpeg_cmyk(
-                            img,
-                            ycck=True,
-                            sampling="420" if i % 4 == 1 else "422",
-                        )
-                    )
-            yield pd.DataFrame(
-                {"doc_id": ids, "payload": pd.Series(payloads, dtype=object)}
-            )
+    def payload_of(i: int) -> bytes:
+        tiles, crop = (2 + i % 2, 2 + i % 3), (1, 2)
+        # ODD ink values: the even tile forms plus one
+        cmy = _tile_image(i, tiles, (47, 19, 11), crop) + 1
+        k = _tile_image(i, tiles, (53, 7, 3), crop) + 1
+        img = np.stack([cmy, cmy, cmy, k], axis=-1)
+        if i % 2 == 0:
+            return encode_jpeg_cmyk(img)
+        return encode_jpeg_cmyk(
+            img, ycck=True, sampling="420" if i % 4 == 1 else "422"
+        )
 
-    return rebalance_for_compute(df.select(F.col(id_col))).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synthesize(df, id_col, payload_of)
 
 
 def image_cmyk_stats(
@@ -6060,42 +5540,25 @@ def image_cmyk_stats(
     per-ink sums — true CMYK, 0 = no ink. Arrow-batched
     ``mapInPandas`` inside the scan's partitions: no shuffle, constant
     memory per batch; at 100 TB decode is embarrassingly parallel."""
-    import numpy as np
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {
-                k: []
-                for k in (
-                    "doc_id", "width", "height", "n_pixels",
-                    "sum_c", "sum_m", "sum_y", "sum_k",
-                )
-            }
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                arr = decode_jpeg(bytes(payload))
-                if arr.ndim != 3 or arr.shape[2] != 4:
-                    raise ValueError(
-                        f"doc {int(doc_id)}: expected a 4-component "
-                        f"CMYK decode, got shape {arr.shape}"
-                    )
-                h, w = arr.shape[:2]
-                s = arr.reshape(-1, 4).astype(np.int64).sum(axis=0)
-                rows["doc_id"].append(int(doc_id))
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["n_pixels"].append(h * w)
-                for ci, col in enumerate(("sum_c", "sum_m", "sum_y", "sum_k")):
-                    rows[col].append(int(s[ci]))
-            yield pd.DataFrame(
-                {k: pd.Series(v, dtype="int64") for k, v in rows.items()}
+    def row(doc_id: int, payload: bytes) -> tuple:
+        arr = decode_jpeg(payload)
+        if arr.ndim != 3 or arr.shape[2] != 4:
+            raise ValueError(
+                f"doc {doc_id}: expected a 4-component "
+                f"CMYK decode, got shape {arr.shape}"
             )
+        h, w = arr.shape[:2]
+        s = arr.reshape(-1, 4).astype(np.int64).sum(axis=0)
+        return (doc_id, w, h, h * w, *(int(v) for v in s))
 
-    return rebalance_for_compute(
-        df.select(F.col(id_col), F.col(payload_col))
-    ).mapInPandas(
-        stats,
+    return _per_payload(
+        df,
+        row,
         "doc_id long, width long, height long, n_pixels long, "
         "sum_c long, sum_m long, sum_y long, sum_k long",
+        id_col=id_col,
+        payload_col=payload_col,
     )
 
 
@@ -6109,38 +5572,15 @@ def synthesize_pnm_images(df: DataFrame, id_col: str) -> DataFrame:
     channels); dimensions ``(5 + id%4) x (6 + id%5)`` are non-multiples
     of 8 so P4's row byte-padding always exercises. Lossless formats →
     the c229 oracle replays sample sums arithmetically."""
-    import numpy as np
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                h, w = 5 + i % 4, 6 + i % 5
-                r = np.arange(h)[:, None]
-                c = np.arange(w)[None, :]
-                base = i * 31 + r * 17 + c * 7
-                variant = ("P1", "P2", "P3", "P4", "P5")[i % 5]
-                if variant in ("P1", "P4"):
-                    img = (base % 2).astype(np.uint8)
-                elif variant == "P2":
-                    img = (base % 256).astype(np.uint8)
-                elif variant == "P5":
-                    img = (base % 60000).astype(np.uint16)
-                else:
-                    img = np.stack(
-                        [((base + ch * 5) % 256) for ch in range(3)],
-                        axis=-1,
-                    ).astype(np.uint8)
-                payloads.append(encode_pnm(img, variant))
-            yield pd.DataFrame(
-                {"doc_id": ids, "payload": pd.Series(payloads, dtype=object)}
-            )
+    def payload_of(i: int) -> bytes:
+        variant = ("P1", "P2", "P3", "P4", "P5")[i % 5]
+        m = {"P1": 2, "P4": 2, "P5": 60000}.get(variant, 256)
+        img = _pixel_grid(i * 31, (5 + i % 4, 6 + i % 5, 3), (17, 7, 5), m)
+        # ch is 0 except in P3's three channels
+        return encode_pnm(img if variant == "P3" else img[:, :, 0], variant)
 
-    return rebalance_for_compute(df.select(F.col(id_col))).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synthesize(df, id_col, payload_of)
 
 
 def pnm_image_stats(
@@ -6152,41 +5592,22 @@ def pnm_image_stats(
     sample (channels included). Arrow-batched ``mapInPandas`` inside
     the scan's partitions — no shuffle, embarrassingly parallel at
     100 TB."""
-    import numpy as np
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {
-                k: []
-                for k in (
-                    "doc_id", "variant", "width", "height",
-                    "n_pixels", "sample_sum",
-                )
-            }
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                payload = bytes(payload)
-                arr = decode_pnm(payload)
-                h, w = arr.shape[:2]
-                rows["doc_id"].append(int(doc_id))
-                rows["variant"].append(payload[:2].decode())
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["n_pixels"].append(h * w)
-                rows["sample_sum"].append(int(arr.astype(np.int64).sum()))
-            out = pd.DataFrame(
-                {
-                    k: pd.Series(v, dtype="object" if k == "variant" else "int64")
-                    for k, v in rows.items()
-                }
-            )
-            yield out
+    def row(doc_id: int, payload: bytes) -> tuple:
+        arr = decode_pnm(payload)
+        h, w = arr.shape[:2]
+        return (
+            doc_id, payload[:2].decode(), w, h, h * w,
+            int(arr.astype(np.int64).sum()),
+        )
 
-    return rebalance_for_compute(
-        df.select(F.col(id_col), F.col(payload_col))
-    ).mapInPandas(
-        stats,
+    return _per_payload(
+        df,
+        row,
         "doc_id long, variant string, width long, height long, "
         "n_pixels long, sample_sum long",
+        id_col=id_col,
+        payload_col=payload_col,
     )
 
 
@@ -6200,33 +5621,15 @@ def synthesize_deep_png_images(df: DataFrame, id_col: str) -> DataFrame:
     the filter-cycling encoder so every unfilter path runs at bpp
     4/6/8. PNG is lossless, so the c219 oracle replays the closed
     form per channel in SQL."""
-    import numpy as np
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                h, w = 5 + i % 4, 6 + i % 3
-                variant = i % 4
-                n_ch = 3 if variant == 0 else 4
-                m = 65536 if variant in (0, 2) else 256
-                dt = np.uint16 if m == 65536 else np.uint8
-                r = np.arange(h)[:, None, None]
-                c = np.arange(w)[None, :, None]
-                ch = np.arange(n_ch)[None, None, :]
-                px = ((i * 131 + r * 17 + c * 7 + ch * 3) % m).astype(dt)
-                payloads.append(
-                    encode_png(px, interlace=variant in (2, 3))
-                )
-            yield pd.DataFrame(
-                {"doc_id": ids, "payload": pd.Series(payloads, dtype=object)}
-            )
+    def payload_of(i: int) -> bytes:
+        variant = i % 4
+        m = 65536 if variant in (0, 2) else 256
+        shape = (5 + i % 4, 6 + i % 3, 3 if variant == 0 else 4)
+        px = _pixel_grid(i * 131, shape, (17, 7, 3), m)
+        return encode_png(px, interlace=variant in (2, 3))
 
-    return rebalance_for_compute(df.select(F.col(id_col))).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synthesize(df, id_col, payload_of)
 
 
 def image_deep_stats(images: DataFrame) -> DataFrame:
@@ -6234,45 +5637,16 @@ def image_deep_stats(images: DataFrame) -> DataFrame:
     depth and reduce to exact integer per-channel statistics
     (``sum_a`` is 0 for alpha-less images). Arrow-batched decode
     inside the scan's partitions — no shuffle."""
-    import numpy as np
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                px = decode_image(bytes(payload))
-                if px.ndim != 3 or px.shape[2] not in (3, 4):
-                    raise ValueError(
-                        f"doc {doc_id}: expected RGB/RGBA, got shape "
-                        f"{px.shape}"
-                    )
-                arr = px.astype(np.int64)
-                rows.append(
-                    (
-                        int(doc_id),
-                        px.shape[1],
-                        px.shape[0],
-                        px.shape[2],
-                        int(arr[:, :, 0].sum()),
-                        int(arr[:, :, 1].sum()),
-                        int(arr[:, :, 2].sum()),
-                        int(arr[:, :, 3].sum()) if px.shape[2] == 4 else 0,
-                        int(arr.max()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "n_channels",
-                    "sum_r", "sum_g", "sum_b", "sum_a", "px_max",
-                ],
+    def row(doc_id: int, payload: bytes) -> tuple:
+        px = decode_image(payload)
+        if px.ndim != 3 or px.shape[2] not in (3, 4):
+            raise ValueError(
+                f"doc {doc_id}: expected RGB/RGBA, got shape {px.shape}"
             )
+        return _channel_row(doc_id, px)
 
-    return rebalance_for_compute(images).mapInPandas(
-        stats,
-        "doc_id long, width long, height long, n_channels long, "
-        "sum_r long, sum_g long, sum_b long, sum_a long, px_max long",
-    )
+    return _per_payload(images, row, _CHANNEL_SCHEMA)
 
 
 def image_gray_stats(images: DataFrame) -> DataFrame:
@@ -6281,40 +5655,22 @@ def image_gray_stats(images: DataFrame) -> DataFrame:
     :func:`image_channel_stats`, same scale shape: Arrow-batched
     decode inside the scan's partitions, no shuffle, constant memory
     per batch."""
-    import numpy as np
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                px = decode_image(bytes(payload))
-                if px.ndim != 2:
-                    raise ValueError(
-                        f"doc {doc_id}: expected grayscale, got shape "
-                        f"{px.shape}"
-                    )
-                arr = px.astype(np.int64)
-                rows.append(
-                    (
-                        int(doc_id),
-                        px.shape[1],
-                        px.shape[0],
-                        px.size,
-                        int(arr.sum()),
-                        int(arr.min()),
-                        int(arr.max()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "n_pixels",
-                    "px_sum", "px_min", "px_max",
-                ],
+    def row(doc_id: int, payload: bytes) -> tuple:
+        px = decode_image(payload)
+        if px.ndim != 2:
+            raise ValueError(
+                f"doc {doc_id}: expected grayscale, got shape {px.shape}"
             )
+        arr = px.astype(np.int64)
+        return (
+            doc_id, px.shape[1], px.shape[0], px.size,
+            int(arr.sum()), int(arr.min()), int(arr.max()),
+        )
 
-    return rebalance_for_compute(images).mapInPandas(
-        stats,
+    return _per_payload(
+        images,
+        row,
         "doc_id long, width long, height long, n_pixels long, "
         "px_sum long, px_min long, px_max long",
     )
@@ -6482,40 +5838,22 @@ def synthesize_ico_files(df: DataFrame, id_col: str) -> DataFrame:
     PNG / 24-bit DIB / 32-bit BGRA DIB by ``(id + f) % 3``, pixel
     (r, c) channel ch = ``(id*7 + f*13 + r*5 + c*3 + ch*11) % 256``,
     and the 32-bit frames carry alpha ``(id + r + c) % 2 * 255``."""
-    import numpy as np
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                frames = []
-                for f in range(1 + i % 3):
-                    n = 8 + 8 * ((i + f) % 2)
-                    r = np.arange(n)[:, None, None]
-                    c = np.arange(n)[None, :, None]
-                    ch = np.arange(3)[None, None, :]
-                    px = (
-                        (i * 7 + f * 13 + r * 5 + c * 3 + ch * 11) % 256
-                    ).astype(np.uint8)
-                    kind = ("png", "bmp", "bmp32")[(i + f) % 3]
-                    fr = {"pixels": px, "kind": kind}
-                    if kind == "bmp32":
-                        rr = np.arange(n)[:, None]
-                        cc = np.arange(n)[None, :]
-                        fr["alpha"] = (
-                            ((i + rr + cc) % 2) * 255
-                        ).astype(np.uint8)
-                    frames.append(fr)
-                payloads.append(encode_ico(frames))
-            yield pd.DataFrame(
-                {"doc_id": ids, "payload": pd.Series(payloads, dtype=object)}
-            )
+    def payload_of(i: int) -> bytes:
+        frames = []
+        for f in range(1 + i % 3):
+            n = 8 + 8 * ((i + f) % 2)
+            px = _pixel_grid(i * 7 + f * 13, (n, n, 3), (5, 3, 11))
+            kind = ("png", "bmp", "bmp32")[(i + f) % 3]
+            fr = {"pixels": px, "kind": kind}
+            if kind == "bmp32":
+                rr = np.arange(n)[:, None]
+                cc = np.arange(n)[None, :]
+                fr["alpha"] = (((i + rr + cc) % 2) * 255).astype(np.uint8)
+            frames.append(fr)
+        return encode_ico(frames)
 
-    return rebalance_for_compute(df.select(F.col(id_col))).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synthesize(df, id_col, payload_of)
 
 
 def ico_stats(
@@ -6525,50 +5863,28 @@ def ico_stats(
     pixels, per-kind counts, the pixel sum over all frames' RGB and
     the alpha sum. Arrow-batched ``mapInPandas`` inside the scan's
     partitions — no shuffle."""
-    import numpy as np
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {
-                k: []
-                for k in (
-                    "doc_id", "n_frames", "n_png", "n_bmp", "n_bmp32",
-                    "n_pixels", "pixel_sum", "alpha_sum",
-                )
-            }
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                frames = decode_ico(bytes(payload))
-                rows["doc_id"].append(int(doc_id))
-                rows["n_frames"].append(len(frames))
-                for kind in ("png", "bmp", "bmp32"):
-                    rows[f"n_{kind}"].append(
-                        sum(1 for fr in frames if fr["kind"] == kind)
-                    )
-                rows["n_pixels"].append(
-                    sum(fr["width"] * fr["height"] for fr in frames)
-                )
-                rows["pixel_sum"].append(
-                    sum(
-                        int(fr["pixels"].astype(np.int64).sum())
-                        for fr in frames
-                    )
-                )
-                rows["alpha_sum"].append(
-                    sum(
-                        int(fr["alpha"].astype(np.int64).sum())
-                        for fr in frames
-                    )
-                )
-            yield pd.DataFrame(
-                {k: pd.Series(v, dtype="int64") for k, v in rows.items()}
-            )
+    def row(doc_id: int, payload: bytes) -> tuple:
+        frames = decode_ico(payload)
+        return (
+            doc_id,
+            len(frames),
+            *(
+                sum(1 for fr in frames if fr["kind"] == kind)
+                for kind in ("png", "bmp", "bmp32")
+            ),
+            sum(fr["width"] * fr["height"] for fr in frames),
+            sum(int(fr["pixels"].astype(np.int64).sum()) for fr in frames),
+            sum(int(fr["alpha"].astype(np.int64).sum()) for fr in frames),
+        )
 
-    return rebalance_for_compute(
-        df.select(F.col(id_col), F.col(payload_col))
-    ).mapInPandas(
-        stats,
+    return _per_payload(
+        df,
+        row,
         "doc_id long, n_frames long, n_png long, n_bmp long, "
         "n_bmp32 long, n_pixels long, pixel_sum long, alpha_sum long",
+        id_col=id_col,
+        payload_col=payload_col,
     )
 
 
@@ -6778,38 +6094,23 @@ def synthesize_apng_images(df: DataFrame, id_col: str) -> DataFrame:
     ``(id*5 + f*7) % 256`` and delay ``f+1``/100, SOURCE blend, NONE
     dispose — so the final canvas has a closed last-covering-frame
     form the c244 oracle replays."""
-    import numpy as np
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                nf = 1 + i % 3
-                base = (
-                    (i * 3 + np.arange(16)[:, None]
-                     + np.arange(16)[None, :]) % 256
-                ).astype(np.uint8)
-                frames = [
-                    {"pixels": np.stack([base] * 3, -1), "delay_num": 1,
-                     "delay_den": 100}
-                ]
-                for f in range(1, nf + 1):
-                    v = (i * 5 + f * 7) % 256
-                    frames.append(
-                        {"pixels": np.full((6, 6, 3), v, np.uint8),
-                         "x": 2 * f, "y": 2 * f,
-                         "delay_num": f + 1, "delay_den": 100}
-                    )
-                payloads.append(encode_apng(frames, num_plays=i % 4))
-            yield pd.DataFrame(
-                {"doc_id": ids, "payload": pd.Series(payloads, dtype=object)}
+    def payload_of(i: int) -> bytes:
+        base = _pixel_grid(i * 3, (16, 16, 1), (1, 1, 0))
+        frames = [
+            {"pixels": np.repeat(base, 3, axis=2), "delay_num": 1,
+             "delay_den": 100}
+        ]
+        for f in range(1, 2 + i % 3):
+            v = (i * 5 + f * 7) % 256
+            frames.append(
+                {"pixels": np.full((6, 6, 3), v, np.uint8),
+                 "x": 2 * f, "y": 2 * f,
+                 "delay_num": f + 1, "delay_den": 100}
             )
+        return encode_apng(frames, num_plays=i % 4)
 
-    return rebalance_for_compute(df.select(F.col(id_col))).mapInPandas(
-        gen, "doc_id long, payload binary"
-    )
+    return _synthesize(df, id_col, payload_of)
 
 
 def apng_stats(
@@ -6818,36 +6119,22 @@ def apng_stats(
     """REAL APNG decode + featurize: frame/loop/delay metadata plus
     the composited FINAL canvas sum. Arrow-batched ``mapInPandas``
     inside the scan's partitions — no shuffle."""
-    import numpy as np
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {
-                k: []
-                for k in (
-                    "doc_id", "n_frames", "num_plays", "delay_num_sum",
-                    "canvas_sum",
-                )
-            }
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                out = decode_apng(bytes(payload))
-                rows["doc_id"].append(int(doc_id))
-                rows["n_frames"].append(len(out["frames"]))
-                rows["num_plays"].append(out["num_plays"])
-                rows["delay_num_sum"].append(
-                    sum(f["delay_num"] for f in out["frames"])
-                )
-                rows["canvas_sum"].append(
-                    int(out["canvas"][..., :3].astype(np.int64).sum())
-                )
-            yield pd.DataFrame(
-                {k: pd.Series(v, dtype="int64") for k, v in rows.items()}
-            )
+    def row(doc_id: int, payload: bytes) -> tuple:
+        out = decode_apng(payload)
+        return (
+            doc_id,
+            len(out["frames"]),
+            out["num_plays"],
+            sum(f["delay_num"] for f in out["frames"]),
+            int(out["canvas"][..., :3].astype(np.int64).sum()),
+        )
 
-    return rebalance_for_compute(
-        df.select(F.col(id_col), F.col(payload_col))
-    ).mapInPandas(
-        stats,
+    return _per_payload(
+        df,
+        row,
         "doc_id long, n_frames long, num_plays long, "
         "delay_num_sum long, canvas_sum long",
+        id_col=id_col,
+        payload_col=payload_col,
     )

@@ -979,6 +979,7 @@ def a04_copy_maxerror(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = os.path.join(tmp, "dirty_customer.csv")
     write_csv(dirty, path)
     tbl = "bp_maxerror_customer"
+    spark.sql(f"DROP TABLE IF EXISTS {tbl}")  # re-entrant: rebuild, not resume
     _clean_stale_location(spark, tbl, None)
     spark.sql(
         f"CREATE TABLE {tbl} (c_custkey BIGINT, c_name STRING, "

@@ -328,6 +328,37 @@ def test_duplicate_groups_driver_gate_matches_distributed(spark, monkeypatch):
     } == {(1, 1), (2, 1), (3, 1), (9, 1), (5, 5), (7, 5), (20, 4), (11, 4), (4, 4)}
 
 
+@pytest.mark.parametrize(
+    "rows, nullable",
+    [
+        ([(1, 2), (2, None), (None, 7), (5, 7)], True),
+        ([(1, 2), (2, 3), (5, 7)], False),
+    ],
+    ids=["null-id", "non-nullable-ids"],
+)
+def test_duplicate_groups_driver_gate_adversarial(
+    spark, monkeypatch, rows, nullable
+):
+    """The union-find gate forced on and forced off agree on rows AND
+    schema for a NULL endpoint (which used to raise TypeError under the
+    gate only) and for non-nullable id columns (whose nullability the
+    gate used to hardcode to True)."""
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    from amazonredshift_blueprints_spark.operators.dedup import duplicate_groups
+
+    schema = StructType(
+        [StructField(c, LongType(), nullable) for c in ("id_a", "id_b")]
+    )
+    pairs = spark.createDataFrame(rows, schema)
+    results = {}
+    for gate in ("200000", "0"):
+        monkeypatch.setenv("SPARK_GRAFT_CC_DRIVER_EDGES", gate)
+        out = duplicate_groups(pairs)
+        results[gate] = (out.schema, sorted(map(tuple, out.collect()), key=str))
+    assert results["200000"] == results["0"]
+
+
 def test_minhash_store_matches_recompute(spark, sf_dir, tmp_path):
     """Dedup against the STORED signature table must equal the same
     pipeline with both sides sketched fresh (the store adds persistence,

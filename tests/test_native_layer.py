@@ -142,6 +142,42 @@ def test_write_csv_count_with_embedded_newlines(spark, tmp_path):
     assert write_csv(df, multi, single_file=False) == 3
 
 
+@pytest.mark.parametrize(
+    "sink",
+    [
+        dict(fn="csv", single_file=True),
+        dict(fn="csv", single_file=False),
+        dict(fn="result", format="json", single_file=True),
+        dict(fn="result", format="parquet", single_file=False),
+        dict(fn="result", format="csv", single_file=False, partition_by=["b"]),
+    ],
+    ids=["csv-file", "csv-dir", "json-file", "parquet-dir", "csv-partitioned"],
+)
+def test_export_executes_its_plan_once(spark, tmp_path, sink):
+    """The returned row count rides the write's own job: a row-counting
+    accumulator inside a Python UDF of the exported plan reads n after
+    one export call, not 2n (a separate count() re-ran the plan)."""
+    from amazonredshift_blueprints_spark.export import write_result
+
+    n = 37
+    seen = spark.sparkContext.accumulator(0)
+
+    @F.udf("boolean")
+    def keep(k):
+        seen.add(1)
+        return True
+
+    df = spark.range(n).filter(keep("id")).withColumn("b", F.col("id") % 3)
+    kw = dict(sink)
+    dest = str(tmp_path / "out")
+    if kw.pop("fn") == "csv":
+        rows = write_csv(df, dest, **kw)
+    else:
+        rows = write_result(df, dest, **kw)
+    assert rows == n
+    assert seen.value == n
+
+
 def test_execute_sql_select_no_driver_collect(spark):
     """A pass-through SELECT must execute (errors surface) without
     materializing rows on the driver; DDL/DML still applies eagerly."""
