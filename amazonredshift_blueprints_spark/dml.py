@@ -9,7 +9,9 @@ strategy those formats implement under the hood, minus the transaction
 log.
 
 Semantics / limits (documented, not hidden):
-- The rewrite is atomic per Spark's ``INSERT OVERWRITE`` job commit.
+- The rewrite writes one staging table and publishes it
+  (:func:`_swap_in`): a catalog rename for plain managed tables, an
+  ``INSERT OVERWRITE`` (atomic per Spark's job commit) otherwise.
   Multi-statement transactions live in transactions.py (staged-swap
   buffer); snapshot history / time travel lives in timetravel.py
   (version-pointer commit log — history-enabled tables make every
@@ -29,15 +31,17 @@ Semantics / limits (documented, not hidden):
   API and every oracle stay unchanged.
 
 100 TB: both operations are one scan + one write, fully distributed;
-predicate pushdown applies to the scan. With partitioned tables,
-``spark.sql.sources.partitionOverwriteMode=dynamic`` confines the
-rewrite to partitions that contain matches.
+predicate pushdown applies to the scan. A partitioned table is
+rewritten whole: the publish replaces every partition, also under
+``spark.sql.sources.partitionOverwriteMode=dynamic`` (see
+:func:`_swap_in`).
 """
 
 from __future__ import annotations
 
 import contextlib
 import os
+import threading
 import time
 import uuid
 
@@ -46,6 +50,9 @@ from pyspark.sql import functions as F
 
 
 _STAGE_PREFIX = "_bp_dml_stage"
+_OVERWRITE_MODE = "spark.sql.sources.partitionOverwriteMode"
+# serializes the static-mode window of _swap_in's INSERT OVERWRITE
+_OVERWRITE_MODE_LOCK = threading.Lock()
 _LOCK_TIMEOUT_S = 120.0
 
 
@@ -191,13 +198,100 @@ def _n(metric) -> int:
     return int(metric) if metric is not None else 0
 
 
+def _catalog_table(spark: SparkSession, table: str):
+    """Spark's session-catalog entry (``CatalogTable``) for ``table``:
+    database, type, provider, schema with column metadata, partition
+    and bucket columns, comment and properties in one metadata lookup.
+    Raises ``AnalysisException`` (TABLE_OR_VIEW_NOT_FOUND) when the
+    table does not exist. Temp views never shadow it."""
+    db, name = _lock_key(spark, table).split(".")[-2:]
+    jvm = spark._jvm
+    ident = jvm.org.apache.spark.sql.catalyst.TableIdentifier(name, jvm.scala.Some(db))
+    return spark._jsparkSession.sessionState().catalog().getTableMetadata(ident)
+
+
+def _quoted(meta) -> str:
+    """Backquoted ``db.table`` of a catalog entry."""
+    return f"`{meta.identifier().database().get()}`.`{meta.identifier().table()}`"
+
+
+def _conform(df, fields):
+    """``df`` cast BY POSITION to the target's column names and types —
+    the coercion ``INSERT OVERWRITE`` would apply — so a stage written
+    from it can take the target's place."""
+    if len(df.columns) != len(fields):
+        raise ValueError(
+            f"rewrite has {len(df.columns)} column(s), target has {len(fields)}"
+        )
+    return df.select(
+        *[F.col(c).cast(f.dataType).alias(f.name) for c, f in zip(df.columns, fields)]
+    )
+
+
+def _swap_in(spark: SparkSession, table: str, stage: str) -> None:
+    """Publish the written managed table ``stage`` as the new contents
+    of ``table``, consuming the stage. The one publish step of both
+    copy-on-write DML (:func:`_rewrite`) and transaction COMMIT.
+
+    When the stage's catalog entry equals the target's in everything
+    but name and location, the swap is a catalog rename: drop the
+    target, rename the stage onto it — no data pass. That holds for a
+    plain MANAGED table with the stage's provider, schema (column
+    comments and CHAR/VARCHAR types live in its metadata) and storage
+    options, and no partition or bucket columns, comment or table
+    properties. Anything else would be silently lost by the rename, so
+    those targets (and EXTERNAL ones, whose location a drop would not
+    free) re-read the stage with ``INSERT OVERWRITE``. That overwrite
+    runs in static partition-overwrite mode: the stage is the table's
+    whole new state, and dynamic mode would keep every partition the
+    new state has no rows for (a DELETE of a whole partition would be
+    lost). The session setting is switched for the statement only.
+
+    The drop→rename window is metadata-only and no wider an atomicity
+    hole than a non-transactional INSERT OVERWRITE (which truncates the
+    target before its write commits). The stage is never dropped on a
+    failure: after the drop it holds the only copy of the new state.
+    The stage must live in the target's database (a rename never
+    crosses databases). A missing target raises rather than being
+    recreated from the stage.
+    """
+    target, staged = _catalog_table(spark, table), _catalog_table(spark, stage)
+    if (
+        target.tableType().name() == "MANAGED"
+        and target.provider().equals(staged.provider())
+        and target.schema().equals(staged.schema())
+        and target.storage().properties().equals(staged.storage().properties())
+        and target.partitionColumnNames().isEmpty()
+        and target.bucketSpec().isEmpty()
+        and target.comment().isEmpty()
+        and target.properties().isEmpty()
+    ):
+        spark.sql(f"DROP TABLE {_quoted(target)}")
+        spark.sql(f"ALTER TABLE {_quoted(staged)} RENAME TO `{target.identifier().table()}`")
+    else:
+        insert = f"INSERT OVERWRITE TABLE {_quoted(target)} SELECT * FROM {_quoted(staged)}"
+        with _OVERWRITE_MODE_LOCK:
+            mode = spark.conf.get(_OVERWRITE_MODE)
+            spark.conf.set(_OVERWRITE_MODE, "static")
+            try:
+                spark.sql(insert)
+            finally:
+                spark.conf.set(_OVERWRITE_MODE, mode)
+        spark.sql(f"DROP TABLE {_quoted(staged)}")
+
+
 def _rewrite(spark: SparkSession, table: str, df) -> None:
-    """Materialize ``df`` into a staging table, then overwrite ``table``.
+    """Replace the contents of ``table`` with ``df``: one write of a
+    staging table, then :func:`_swap_in`.
 
     Spark (correctly) refuses ``INSERT OVERWRITE`` of a table the plan
     also reads (UNSUPPORTED_OVERWRITE), so the rewrite stages through a
     second managed table — the minimal copy-on-write commit without a
-    table format's transaction log.
+    table format's transaction log. For a plain MANAGED target the
+    swap is a catalog rename, so the stage write is the ONLY data pass;
+    ``df`` is cast to the target's schema by position first, so the
+    renamed table has exactly the column names and types an INSERT
+    would have coerced to.
 
     The staging name is unique per call: concurrent DML statements in
     one warehouse (e.g. two sessions, or the streaming upsert sink's
@@ -205,6 +299,11 @@ def _rewrite(spark: SparkSession, table: str, df) -> None:
     or drop each other's stage. Note the per-TARGET-table race is still
     the caller's to serialize — two simultaneous rewrites of the SAME
     table last-write-wins, as in any catalog without a transaction log.
+
+    Inside a transaction, the first rewrite of a table writes ``df``
+    as that table's stage (transactions.py): ``table`` is then the
+    not-yet-written stage name :func:`transactions.rewrite_target`
+    returned, and ``df`` read the target itself.
 
     History-tracked tables (timetravel.py) skip the stage entirely:
     the new state writes ONCE to a fresh version directory and the
@@ -216,9 +315,12 @@ def _rewrite(spark: SparkSession, table: str, df) -> None:
     this full-state branch remains for scd2_apply and any caller whose
     new state isn't a per-file transform of the old.
     """
-    from . import timetravel
-    from .ingest import _clean_stale_location
+    from . import timetravel, transactions
 
+    txn = transactions.active(spark)
+    if txn is not None and txn.stage_pending(table):
+        txn.write_stage(table, df)
+        return
     if timetravel.is_history_table(spark, table):
         # df was derived from spark.table(table) — the CATALOG POINTER's
         # version, which lags the log tip in the documented post-crash
@@ -234,46 +336,15 @@ def _rewrite(spark: SparkSession, table: str, df) -> None:
         )
         return
 
-    stage = f"{_STAGE_PREFIX}_{uuid.uuid4().hex[:12]}"
-    _clean_stale_location(spark, stage, None)
-    # MANAGED targets swap the staged data in by catalog rename — the
-    # stage write is the ONLY data pass (r16). The former
-    # ``INSERT OVERWRITE TABLE target SELECT * FROM stage`` re-read and
-    # re-wrote every surviving byte a second time, doubling the I/O of
-    # every plain-table DELETE/UPDATE/MERGE. The stage is cast to the
-    # target's schema BY POSITION first, so the rename preserves
-    # exactly the column names/types the INSERT path would have
-    # coerced to. The drop→rename window is metadata-only and no wider
-    # an atomicity hole than a non-transactional INSERT OVERWRITE
-    # (which truncates the target before the write commits); on a
-    # rename failure the full state still exists in the stage table.
-    # EXTERNAL targets keep the overwrite path: dropping one wouldn't
-    # free its location, so a rename could not take its place.
-    try:
-        tgt_type = spark.catalog.getTable(table).tableType
-    except Exception:
-        tgt_type = None
-    tgt_fields = spark.table(table).schema.fields
-    if tgt_type == "MANAGED" and len(df.columns) == len(tgt_fields):
-        staged = df.select(
-            *[
-                F.col(c).cast(f.dataType).alias(f.name)
-                for c, f in zip(df.columns, tgt_fields)
-            ]
-        )
-        staged.write.mode("overwrite").saveAsTable(stage)
-        # No cleanup on failure: once the target is dropped the stage
-        # holds the ONLY copy of the new state, so it must survive any
-        # error for manual recovery (dropping it would destroy data).
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        spark.sql(f"ALTER TABLE {stage} RENAME TO {table}")
-        return
+    from .ingest import _clean_stale_location
 
-    df.write.mode("overwrite").saveAsTable(stage)
-    try:
-        spark.sql(f"INSERT OVERWRITE TABLE {table} SELECT * FROM {stage}")
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {stage}")
+    target = _catalog_table(spark, table)
+    stage = f"{target.identifier().database().get()}.{_STAGE_PREFIX}_{uuid.uuid4().hex[:12]}"
+    _clean_stale_location(spark, stage, None)
+    _conform(df, spark.table(_quoted(target)).schema.fields).write.mode(
+        "overwrite"
+    ).saveAsTable(stage)
+    _swap_in(spark, table, stage)
 
 
 def _history_pre_image(spark: SparkSession, table: str):
@@ -369,9 +440,9 @@ def delete_from(spark: SparkSession, table: str, condition: str) -> int:
     detection scan.
     """
     hit = F.coalesce(F.expr(condition), F.lit(False))
-    from .transactions import resolve_active
+    from .transactions import rewrite_target
 
-    table = resolve_active(spark, table)  # txn-staged when one is open
+    src, table = rewrite_target(spark, table)  # txn: read target or stage, write stage
     with _table_lock(spark, table):
         prev, paths = _history_pre_image(spark, table)
         if prev is not None:
@@ -385,7 +456,7 @@ def delete_from(spark: SparkSession, table: str, condition: str) -> int:
                 op="delete",
             )
         obs = Observation()
-        observed = spark.table(table).observe(
+        observed = spark.table(src).observe(
             obs, F.sum(F.when(hit, 1).otherwise(0)).alias("n_deleted")
         )
         _rewrite(spark, table, observed.filter(~hit))
@@ -413,11 +484,11 @@ def delete_using(spark: SparkSession, table: str, source, condition: str) -> int
     selective path needs a target-only predicate, which a join-delete
     by construction does not have (key-only conditions can use
     ``merge_into`` with a delete marker instead)."""
-    from .transactions import resolve_active
+    from .transactions import rewrite_target
 
-    table = resolve_active(spark, table)  # txn-staged when one is open
+    src, table = rewrite_target(spark, table)  # txn: read target or stage, write stage
     with _table_lock(spark, table):
-        t = spark.table(table)
+        t = spark.table(src)
         s = source.select(
             *[F.col(c).alias(f"_src_{c}") for c in source.columns]
         )
@@ -467,16 +538,16 @@ def update_from(
     the rest carry by hard link."""
     import os as _os
 
-    from .transactions import resolve_active
+    from .transactions import rewrite_target
 
-    table = resolve_active(spark, table)  # txn-staged when one is open
+    src, table = rewrite_target(spark, table)  # txn: read target or stage, write stage
     obs = Observation()
     pairs = [(k, k) if isinstance(k, str) else tuple(k) for k in keys]
     with _table_lock(spark, table):
         prev, paths = _history_pre_image(spark, table)
         full_target = (
             spark.read.parquet(*paths) if prev is not None
-            else spark.table(table)
+            else spark.table(src)
         )
         missing = [s for _, s in pairs if s not in source.columns]
         if missing:
@@ -645,14 +716,14 @@ def merge_into(
     # the lock covers the target READ as well as the overwrite: the
     # lost-update race is read-pre-image → overwrite, so a reader that
     # snapshots before a concurrent writer commits must not write back
-    from .transactions import resolve_active
+    from .transactions import rewrite_target
 
-    table = resolve_active(spark, table)  # txn-staged when one is open
+    src, table = rewrite_target(spark, table)  # txn: read target or stage, write stage
     with _table_lock(spark, table):
         prev, paths = _history_pre_image(spark, table)
         full_target = (
             spark.read.parquet(*paths) if prev is not None
-            else spark.table(table)
+            else spark.table(src)
         )
         missing_keys = [k for k in keys if k not in source.columns]
         if missing_keys:
@@ -830,11 +901,11 @@ def update_table(
     (no separate pre-count job).
     """
     cond = F.expr(condition)
-    from .transactions import resolve_active
+    from .transactions import rewrite_target
 
-    table = resolve_active(spark, table)  # txn-staged when one is open
+    src, table = rewrite_target(spark, table)  # txn: read target or stage, write stage
     with _table_lock(spark, table):
-        df = spark.table(table)
+        df = spark.table(src)
         unknown = set(assignments) - set(df.columns)
         if unknown:
             raise ValueError(f"UPDATE of unknown column(s): {sorted(unknown)}")
@@ -930,14 +1001,14 @@ def scd2_apply(
     detection scan).
     """
     obs = Observation()
-    from .transactions import resolve_active
+    from .transactions import rewrite_target
 
-    table = resolve_active(spark, table)  # txn-staged when one is open
+    src, table = rewrite_target(spark, table)  # txn: read target or stage, write stage
     with _table_lock(spark, table):
         prev, paths = _history_pre_image(spark, table)
         full_dim = (
             spark.read.parquet(*paths) if prev is not None
-            else spark.table(table)
+            else spark.table(src)
         )
         dim = full_dim
         meta = [valid_from_col, valid_to_col, current_col]

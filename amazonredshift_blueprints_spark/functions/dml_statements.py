@@ -9,7 +9,7 @@ standard statement shapes and lower them onto the copy-on-write
 implementations in ``dml.py`` (delete_from / update_table /
 merge_into) — same semantics, same per-table writer lock, same
 transaction-buffer routing (the dml functions resolve the staged table
-themselves via ``transactions.resolve_active``).
+themselves via ``transactions.rewrite_target``).
 
 Deliberately strict: only shapes whose semantics the dml layer
 faithfully implements are accepted; anything else raises ``ValueError``

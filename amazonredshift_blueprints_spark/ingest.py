@@ -81,13 +81,18 @@ def _clean_stale_location(
     import shutil
     from urllib.parse import urlparse
 
+    if schema_name is None and "." in table_name:
+        schema_name, table_name = table_name.rsplit(".", 1)
     qualified = f"{schema_name}.{table_name}" if schema_name else table_name
     if spark.catalog.tableExists(qualified):
         return
     warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path
     if not warehouse:
         return
-    sub = f"{schema_name}.db/{table_name}" if schema_name else table_name
+    # Spark's default layout: the default database IS the warehouse
+    # directory, every other database is ``<warehouse>/<db>.db``
+    db = (schema_name or spark.catalog.currentDatabase()).lower()
+    sub = table_name if db == "default" else f"{db}.db/{table_name}"
     stale = os.path.join(warehouse, sub)
     if os.path.isdir(stale):
         shutil.rmtree(stale, ignore_errors=True)
@@ -172,7 +177,9 @@ def ingest_csv(
 ) -> int:
     """Load CSV file(s) into a catalog table (upload_file.py:118-155).
 
-    Returns the number of rows written. One distributed read + one
+    Returns the table's row count after the load (see
+    :func:`ingest_files`): the rows written for ``replace``/``fail``,
+    the new table total for ``append``. One distributed read + one
     distributed write replace the reference's 10 000-row chunk loop and
     its mode-demotion bookkeeping (upload_file.py:131-132).
     """
@@ -213,12 +220,12 @@ def read_files_tolerant(
     columns to string rather than failing them, so only structural
     errors (column-count drift, malformed JSON) count — divergence
     stated here, not hidden. Pass 2 re-reads with the schema in
-    PERMISSIVE mode and a corrupt-record capture column, counts the
-    captured rows, and filters them out; count and load share one
-    cached scan (required, see the inline note) whose release is the
-    caller's job. Row-wise tolerance only makes sense for record
-    formats (csv/json); parquet/orc corruption is structural and keeps
-    fail-fast semantics.
+    PERMISSIVE mode and a corrupt-record capture column, gates the
+    captured rows against ``max_error``, and filters them out; gate and
+    load share one cached scan (required, see the inline note) whose
+    release is the caller's job. Row-wise tolerance only makes sense
+    for record formats (csv/json); parquet/orc corruption is structural
+    and keeps fail-fast semantics.
     """
     if format not in ("csv", "json"):
         raise ValueError(
@@ -251,8 +258,20 @@ def read_files_tolerant(
     # after the table write) — otherwise the cache would stay pinned
     # past the load with nobody left holding a handle.
     df = reader.format(format).load(paths).cache()
-    n_bad = df.filter(F.col(_CORRUPT_COL).isNotNull()).count()
-    if n_bad > max_error:
+    bad = df.filter(F.col(_CORRUPT_COL).isNotNull())
+    # ONE job fills the cache, gates MAXERROR and yields the dropped raw
+    # lines for stl_load_errors: at most max_error + 1 of them reach the
+    # driver (that bound is what makes the collect legal), sorted for
+    # deterministic registration order
+    dropped = [
+        r[0]
+        for r in bad.select(_CORRUPT_COL)
+        .orderBy(_CORRUPT_COL)
+        .limit(max_error + 1)
+        .collect()
+    ]
+    if len(dropped) > max_error:
+        n_bad = bad.count()  # the exact figure, on the failure path only
         df.unpersist()
         raise ValueError(
             f"load found {n_bad} unparseable row(s), exceeding MAXERROR "
@@ -260,16 +279,7 @@ def read_files_tolerant(
         )
     clean = df.filter(F.col(_CORRUPT_COL).isNull()).drop(_CORRUPT_COL)
     clean._bp_cache_owner = df
-    # the dropped raw lines, for stl_load_errors: <= max_error rows of
-    # driver metadata BY THE GATE ABOVE (that bound is what makes this
-    # collect legal); sorted for deterministic registration order
-    clean._bp_load_errors = [
-        r[0]
-        for r in df.filter(F.col(_CORRUPT_COL).isNotNull())
-        .select(_CORRUPT_COL)
-        .orderBy(_CORRUPT_COL)
-        .collect()
-    ]
+    clean._bp_load_errors = dropped
     return clean
 
 
@@ -298,7 +308,12 @@ def ingest_files(
     (Spark's CSV reader has no epoch-numeric timestamp parse) and cast
     back via timestamp_seconds/timestamp_millis after the parse —
     which needs the declared target schema to know WHICH columns are
-    timestamps, so it refuses on a first load into a missing table."""
+    timestamps, so it refuses on a first load into a missing table.
+
+    Returns the table's row count after the load. A load that creates
+    or replaces the table (``fail``/``replace``) counts the rows on its
+    own write (export's ``_counted``); ``append`` counts the table
+    afterwards, because its total includes the rows already there."""
     if insert_method not in INSERT_METHODS:
         raise ValueError(
             f"insert_method must be one of {sorted(INSERT_METHODS)}, got {insert_method!r}"
@@ -373,6 +388,11 @@ def ingest_files(
         caster = F.timestamp_seconds if time_epoch == "secs" else F.timestamp_millis
         for c in epoch_cols:
             df = df.withColumn(c, caster(F.col(c)))
+    rows = None
+    if insert_method != "append":
+        from .export import _counted
+
+        df, rows = _counted(df)
     try:
         df.write.mode(INSERT_METHODS[insert_method]).format("parquet").saveAsTable(
             qualified
@@ -386,7 +406,7 @@ def ingest_files(
         from .functions.system_tables import record_load_errors
 
         record_load_errors(spark, qualified, dropped)
-    return spark.table(qualified).count()
+    return rows() if rows is not None else spark.table(qualified).count()
 
 
 def parse_fixedwidth_spec(spec: str) -> list[tuple[str, int]]:

@@ -143,15 +143,18 @@ def pagerank(
             # one job per round, and a driver collect of the mass here
             # added a second — the crossJoin form computes mass and the
             # new vector in the same job, zero driver round trips.
-            # BIGINT DIV == Python // for these non-negative operands,
-            # so the shares are bit-identical to the collected form.
+            # The product is taken in DECIMAL(38,0): mass * damping
+            # overflows BIGINT once the mass passes 2^63 / damping,
+            # while the quotient always fits. DIV == Python // for
+            # these non-negative operands, so the shares are
+            # bit-identical to the collected form.
             mass_df = F.broadcast(
                 rank.join(dangling_nodes, "node").agg(
                     F.sum("rank").alias("_bp_m")
                 )
             )
             share_col = F.expr(
-                f"CAST(coalesce(_bp_m, 0) * {damping} "
+                f"CAST(CAST(coalesce(_bp_m, 0) AS DECIMAL(38,0)) * {damping} "
                 f"DIV {100 * n_nodes} AS BIGINT)"
             )
             rank = updated.crossJoin(mass_df).select(

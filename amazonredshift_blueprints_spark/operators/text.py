@@ -1370,13 +1370,17 @@ def train_bpe_merges(
             # the rewritten vocab every _BPE_FLUSH_EVERY rounds bounds
             # the depth while keeping the per-round persist savings
             # (the flush never fires for the default 12 merges).
+            # ``words`` names the new frame before it materializes, so
+            # if the count throws, the outer finally releases it and
+            # the inner one the old cache.
             if rank % _BPE_FLUSH_EVERY == 0 and rank < n_merges:
-                flushed = words.select(
+                old, words = words, words.select(
                     "word", "cnt", seq_expr.alias("seq")
                 ).persist(StorageLevel.MEMORY_AND_DISK)
-                flushed.count()  # materialize before releasing the old cache
-                words.unpersist()
-                words = flushed
+                try:
+                    words.count()  # materialize before releasing the old cache
+                finally:
+                    old.unpersist()
                 seq_expr = F.col("seq")
     finally:
         words.unpersist()

@@ -7723,9 +7723,9 @@ def c83_png_variant_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "state, i.e. the rollback genuinely undid the delete. Redshift "
         "gave the reference serializable transactions at its "
         "pass-through site (execute_sql.py:77); this is the "
-        "format-agnostic copy-on-write equivalent (one extra table copy "
-        "per touched table; a transaction log — Delta/Iceberg — "
-        "amortizes that at 100 TB)",
+        "format-agnostic copy-on-write equivalent (the first DML writes "
+        "the stage straight from the table and COMMIT renames it in, so "
+        "a transaction costs what its statements cost autocommitted)",
     tags=("dml", "native", "txn"),
 )
 def q68_txn_commit_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:

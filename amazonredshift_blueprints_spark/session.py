@@ -12,10 +12,12 @@ Scale notes (100 TB design):
   coalesces small post-shuffle partitions automatically.
 - Timezone pinned to UTC so timestamp semantics match the DuckDB oracle
   and are cluster-location independent.
-- ``events.parquet`` stores INT64 TIMESTAMP(NANOS) which Spark 4.x refuses
-  to read natively; we read it as long (``nanosAsLong``) and cast back to a
-  microsecond timestamp — the exact value DuckDB produces for the same file
-  (the fixture's nanos are all whole microseconds).
+- The fixture parquet stores its timestamps as INT64 TIMESTAMP(MICROS,
+  isAdjustedToUTC=false), which Spark reads as TIMESTAMP_NTZ;
+  :func:`normalize_events_ts` casts ``events.ts`` to TIMESTAMP. A
+  TIMESTAMP(NANOS) file, which Spark 4.x refuses to read natively, reads
+  as a long (``nanosAsLong``) and is cast back to a microsecond timestamp
+  — the value DuckDB produces for the same file.
 """
 
 from __future__ import annotations
@@ -45,9 +47,9 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # (configure_runtime) — the driver harness constructs its own SparkSession.
 _RUNTIME_CONFS = {
     "spark.sql.session.timeZone": "UTC",
-    # events.parquet has INT64 TIMESTAMP(NANOS,false); without this Spark
-    # 4.x raises PARQUET_TYPE_ILLEGAL on read. With it, ts arrives as a
-    # long we convert in load_tables().
+    # an INT64 TIMESTAMP(NANOS) column (not in the fixtures, which store
+    # MICROS) would raise PARQUET_TYPE_ILLEGAL on read in Spark 4.x; with
+    # this it arrives as a long that normalize_events_ts converts.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
@@ -116,9 +118,10 @@ def configure_runtime(spark: SparkSession) -> None:
 def normalize_events_ts(df: DataFrame, ts_col: str = "ts") -> DataFrame:
     """Normalize ``events.ts`` to TimestampType whatever the reader produced.
 
-    The fixture parquet stores INT64 TIMESTAMP(NANOS). Depending on the
-    Spark build and whether ``nanosAsLong`` took effect before the read,
-    the column arrives as one of:
+    The fixture parquet stores INT64 TIMESTAMP(MICROS,
+    isAdjustedToUTC=false), which arrives as ``timestamp_ntz``; a
+    TIMESTAMP(NANOS) file arrives, depending on the Spark build and
+    whether ``nanosAsLong`` took effect before the read, as one of:
 
     - ``bigint`` (nanosAsLong path): integer-divide to micros and cast.
       Integer division matters — double division loses precision on

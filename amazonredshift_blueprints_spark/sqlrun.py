@@ -158,7 +158,7 @@ def _execute_sql_inner(spark: SparkSession, query: str) -> None:
         # DELETE/UPDATE/MERGE lowered onto dml.py's copy-on-write
         # implementations (Spark SQL refuses these verbs on v1 parquet
         # tables); the dml functions route through the transaction
-        # buffer themselves via transactions.resolve_active
+        # buffer themselves via transactions.rewrite_target
         print("Your query has been successfully executed.")
         return
     txn = transactions.active(spark)

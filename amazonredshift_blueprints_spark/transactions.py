@@ -11,20 +11,30 @@ staged-swap buffer (VERDICT r8 #4):
 - On the first write to a table inside an open transaction, the
   transaction takes that table's writer lock (``dml._table_lock`` — held
   until COMMIT/ROLLBACK, serializing concurrent writers per table) and
-  snapshots the table into a per-transaction staging table
-  (``_bp_txn_<id>_<n>``). All subsequent DML in the transaction runs
-  against the staging table.
-- Reads inside the transaction see the staged state: the staged table's
-  BARE name is shadowed by a temporary view over the stage (Spark
-  resolves single-part names to temp views first), so
+  names a per-transaction staging table (``<db>._bp_txn_<id>_<n>``, in
+  the target's database). The stage is written lazily: a first
+  DELETE/UPDATE/MERGE reads the target itself and writes its result AS
+  the stage (:func:`rewrite_target`); only a first write that appends
+  (INSERT, COPY — :meth:`Transaction.resolve_write`) needs the existing
+  rows, so only it snapshots the table into the stage first. All
+  later DML in the transaction reads and rewrites the stage.
+- Reads inside the transaction see the staged state: once the stage
+  exists, the table's BARE name is shadowed by a temporary view over
+  it (Spark resolves single-part names to temp views first), so
   ``SELECT ... FROM t`` between BEGIN and COMMIT reads your writes.
   (Database-qualified references bypass the shadow — documented limit.)
-- COMMIT publishes each staged table back with ``INSERT OVERWRITE`` under
-  the still-held locks, then drops the stages. Each table's swap is
-  atomic (Spark's job commit); a multi-TABLE commit is sequential, so a
-  crash mid-commit can publish a prefix — single-statement scripts and
-  single-table transactions are fully atomic, multi-table atomicity
-  needs a table format's log (Delta/Iceberg), stated honestly.
+- COMMIT publishes each stage under the still-held locks with
+  ``dml._swap_in``, the publish step autocommit DML uses: a plain
+  MANAGED target takes the stage by catalog rename (no data pass);
+  EXTERNAL targets and targets whose layout a rename would lose
+  (partitioning, comment, properties, ...) are overwritten with
+  ``INSERT OVERWRITE``; history-tracked targets publish one new version
+  (timetravel.commit_version). Each table's swap is atomic at the
+  level of the non-transactional catalog; a multi-TABLE commit is
+  sequential, so a crash mid-commit can publish a prefix — single-
+  statement scripts and single-table transactions are fully atomic,
+  multi-table atomicity needs a table format's log (Delta/Iceberg),
+  stated honestly.
 - ROLLBACK drops the stages and releases the locks; the target tables
   were never touched.
 
@@ -34,11 +44,14 @@ nothing touches them before COMMIT. :func:`clean_stale_transactions`
 removes orphaned stages; the held lock files are the documented manual
 cleanup (dml.py).
 
-100 TB: the first-write snapshot is one full copy of the table — the same
-cost class as the copy-on-write rewrite itself (every DML here rewrites
-the table once); a transaction adds exactly one extra table-copy per
-touched table, regardless of statement count. Real warehouses amortize
-this with a transaction log; on Spark that is Delta/Iceberg territory.
+100 TB: a transaction writes each touched table once per statement, the
+same as autocommit DML: the first DELETE/UPDATE/MERGE writes the stage
+from the target, later ones rewrite the stage, and COMMIT of a plain
+table is a metadata rename. Only a table whose first write appends pays
+one extra full copy (the snapshot), and only layout-carrying or
+EXTERNAL targets pay a second write at COMMIT. Real warehouses avoid
+even those with a transaction log; on Spark that is Delta/Iceberg
+territory.
 """
 
 from __future__ import annotations
@@ -78,7 +91,8 @@ class Transaction:
         # stage. All in-transaction names resolve against this snapshot.
         self.database = spark.catalog.currentDatabase().lower()
         self._locks = contextlib.ExitStack()
-        self._staged: dict[str, tuple[str, str]] = {}  # key -> (qualified, stage)
+        self._stages: dict[str, str] = {}  # key -> stage, every locked table
+        self._staged: dict[str, tuple[str, str]] = {}  # key -> (qualified, stage), written
         self._views: list[str] = []
         self._done = False
 
@@ -88,30 +102,63 @@ class Transaction:
         name = table.replace("`", "").strip().lower()
         return name if "." in name else f"{self.database}.{name}"
 
-    def resolve_write(self, table: str) -> str:
-        """Map a write target to this transaction's staging table,
-        snapshotting the table (and locking it) on first touch."""
+    def _touch(self, table: str) -> str:
+        """Lock ``table`` on first touch and name its stage (in the
+        table's own database, so COMMIT's rename never crosses
+        databases); returns the key."""
         from .dml import _table_lock
-        from .ingest import _clean_stale_location
 
         if self._done:
             raise RuntimeError("transaction already finished")
         key = self._key(table)
-        if key not in self._staged:
+        if key not in self._stages:
             # lock on the already-qualified key so the lock file name is
             # stable even if the session database changed after BEGIN
             self._locks.enter_context(_table_lock(self.spark, key))
-            stage = f"{_TXN_PREFIX}_{self.txn_id}_{len(self._staged)}"
-            _clean_stale_location(self.spark, stage, None)
-            qualified = _qualified(key)
-            self.spark.table(qualified).write.mode("overwrite").saveAsTable(stage)
-            self._staged[key] = (qualified, stage)
-            bare = key.rsplit(".", 1)[-1]
-            self.spark.sql(
-                f"CREATE OR REPLACE TEMPORARY VIEW {bare} AS SELECT * FROM {stage}"
-            )
-            self._views.append(bare)
-        return self._staged[key][1]
+            db = key.rsplit(".", 1)[0]
+            self._stages[key] = f"{db}.{_TXN_PREFIX}_{self.txn_id}_{len(self._stages)}"
+        return key
+
+    def resolve_write(self, table: str) -> str:
+        """Map an appending write (INSERT, COPY) to this transaction's
+        staging table, snapshotting the table into it on first touch —
+        an append needs the existing rows."""
+        key = self._touch(table)
+        if key not in self._staged:
+            self.write_stage(self._stages[key], self.spark.table(_qualified(key)))
+        return self._stages[key]
+
+    def rewrite_target(self, table: str) -> tuple[str, str]:
+        """``(read, write)`` names for a DELETE/UPDATE/MERGE: the stage
+        for both once it exists; before that the target itself is read
+        and the statement's result becomes the stage (no snapshot)."""
+        key = self._touch(table)
+        stage = self._stages[key]
+        return (stage if key in self._staged else _qualified(key)), stage
+
+    def stage_pending(self, name: str) -> bool:
+        """True for a stage this transaction named but has not written."""
+        return name in self._stages.values() and name not in {
+            s for _, s in self._staged.values()
+        }
+
+    def write_stage(self, stage: str, df) -> None:
+        """Write ``df`` (the table's new state) as the table's stage and
+        shadow the bare name with it for read-your-writes."""
+        from .dml import _conform
+        from .ingest import _clean_stale_location
+
+        key = next(k for k, s in self._stages.items() if s == stage)
+        qualified = _qualified(key)
+        _clean_stale_location(self.spark, stage, None)
+        fields = self.spark.table(qualified).schema.fields
+        _conform(df, fields).write.mode("overwrite").saveAsTable(stage)
+        self._staged[key] = (qualified, stage)
+        bare = key.rsplit(".", 1)[-1]
+        self.spark.sql(
+            f"CREATE OR REPLACE TEMPORARY VIEW {bare} AS SELECT * FROM {stage}"
+        )
+        self._views.append(bare)
 
     def commit(self) -> int:
         """Publish every staged table under the held locks; returns the
@@ -127,6 +174,7 @@ class Transaction:
         must not block the table forever)."""
         self._drop_views()
         from . import timetravel
+        from .dml import _swap_in
 
         items = list(self._staged.values())
         for i, (qualified, stage) in enumerate(items):
@@ -143,7 +191,7 @@ class Transaction:
                         self.spark.table(stage),
                         op="txn commit",
                         # the staged state derived from the catalog
-                        # pointer's version (the BEGIN-time snapshot);
+                        # pointer's version (read at the first write);
                         # record it as lineage parent so history() can
                         # flag a bypassed post-crash log tip
                         based_on=timetravel.pointer_version(
@@ -151,9 +199,7 @@ class Transaction:
                         ),
                     )
                 else:
-                    self.spark.sql(
-                        f"INSERT OVERWRITE TABLE {qualified} SELECT * FROM {stage}"
-                    )
+                    _swap_in(self.spark, qualified, stage)
             except Exception as exc:
                 kept = {q: s for q, s in items[i:]}
                 self._cleanup(drop_stages=[s for _, s in items[:i]])
@@ -184,6 +230,7 @@ class Transaction:
         self._done = True
         for stage in drop_stages:
             self.spark.sql(f"DROP TABLE IF EXISTS {stage}")
+        self._stages = {}
         self._staged = {}
         self._locks.close()  # release every table lock
         _active_slot(self.spark).pop("txn", None)
@@ -226,11 +273,13 @@ def rollback(spark: SparkSession) -> int:
     return txn.rollback()
 
 
-def resolve_active(spark: SparkSession, table: str) -> str:
-    """DML write-target hook: inside an open transaction, route the
-    write to the staging table; otherwise pass the name through."""
+def rewrite_target(spark: SparkSession, table: str) -> tuple[str, str]:
+    """DML hook: ``(read, write)`` table names for a DELETE/UPDATE/MERGE
+    of ``table``. Inside an open transaction the write goes to the
+    table's stage (see :meth:`Transaction.rewrite_target`); otherwise
+    both are ``table``."""
     txn = active(spark)
-    return txn.resolve_write(table) if txn is not None else table
+    return txn.rewrite_target(table) if txn is not None else (table, table)
 
 
 def clean_stale_transactions(
@@ -239,6 +288,10 @@ def clean_stale_transactions(
     """Drop ``_bp_txn_*`` staging tables (and their directories) left by
     crashed transactions, and remove writer-lock files whose recorded
     holder pid is dead. Run at session start or from a janitor.
+
+    Stages live in their target's database, so every database is
+    scanned; removed stages are reported by bare name in the current
+    database and as ``db.name`` elsewhere.
 
     Age gate (r9 advisor): a stage is only removed when its warehouse
     directory's mtime is older than ``min_age_s`` (default 1 h), so a
@@ -250,38 +303,46 @@ def clean_stale_transactions(
     import os
     import shutil
     import time
+    from urllib.parse import urlparse
 
-    from .dml import _lock_dir, clean_stale_locks
+    from .dml import clean_stale_locks
 
-    live = set()
     txn = active(spark)
-    if txn is not None:
-        live = {stage for _, stage in txn._staged.values()}
-    warehouse = os.path.dirname(_lock_dir(spark))
+    live = set(txn._stages.values()) if txn is not None else set()
+    current = spark.catalog.currentDatabase().lower()
     now = time.time()
 
-    def _old_enough(stage: str) -> bool:
-        path = os.path.join(warehouse, stage)
+    def _old_enough(path: str) -> bool:
         try:
             return now - os.path.getmtime(path) >= min_age_s
         except OSError:
             return True  # no directory left — catalog entry is an orphan
 
     dropped = []
-    for t in spark.catalog.listTables():
-        if t.name.startswith(_TXN_PREFIX) and t.name not in live and _old_enough(t.name):
-            spark.sql(f"DROP TABLE IF EXISTS {t.name}")
-            dropped.append(t.name)
-    # orphan directories whose table object is already gone
-    if os.path.isdir(warehouse):
-        for entry in os.listdir(warehouse):
+    for db in spark.catalog.listDatabases():
+        home = urlparse(db.locationUri).path
+        removed = set()
+        for t in spark.catalog.listTables(db.name):
+            name = f"{db.name}.{t.name}"
             if (
-                entry.startswith(_TXN_PREFIX)
-                and entry not in live
-                and entry not in dropped
-                and _old_enough(entry)
+                t.name.startswith(_TXN_PREFIX)
+                and name not in live
+                and _old_enough(os.path.join(home, t.name))
             ):
-                shutil.rmtree(os.path.join(warehouse, entry), ignore_errors=True)
-                dropped.append(entry)
+                spark.sql(f"DROP TABLE IF EXISTS {name}")
+                removed.add(t.name)
+        # orphan directories whose table object is already gone
+        if os.path.isdir(home):
+            for entry in os.listdir(home):
+                path = os.path.join(home, entry)
+                if (
+                    entry.startswith(_TXN_PREFIX)
+                    and f"{db.name}.{entry}" not in live
+                    and entry not in removed
+                    and _old_enough(path)
+                ):
+                    shutil.rmtree(path, ignore_errors=True)
+                    removed.add(entry)
+        dropped.extend(n if db.name == current else f"{db.name}.{n}" for n in removed)
     dropped.extend(clean_stale_locks(spark))
     return sorted(dropped)

@@ -136,6 +136,35 @@ def test_pagerank_dangling_policies(spark):
     assert again == got
 
 
+def test_pagerank_dangling_share_near_bigint_limit(spark, monkeypatch):
+    """'redistribute' with a dangling mass past 2^63 / damping: the
+    share's mass * damping product overflows BIGINT, so it is taken in
+    DECIMAL(38,0) before the DIV. Replayed with Python integers (the
+    per-edge contribution keeps the engine's double floor)."""
+    import math
+
+    from amazonredshift_blueprints_spark.operators import graph
+
+    scale = 2**63 // 85 // 4  # 8 dangling leaves: mass * 85 ~ 2^64
+    monkeypatch.setattr(graph, "RANK_SCALE", scale)
+    leaves = range(1, 9)
+    edges = spark.createDataFrame([(0, n) for n in leaves], "src long, dst long")
+    got = {
+        x["node"]: x["rank"]
+        for x in graph.pagerank(edges, iterations=2, dangling="redistribute").collect()
+    }
+
+    teleport = scale * 15 // 100
+    r = {n: scale for n in range(9)}
+    for _ in range(2):
+        mass = sum(r[n] for n in leaves)
+        assert mass * 85 >= 2**63  # the product a BIGINT cannot hold
+        share = mass * 85 // (100 * 9)
+        recv = math.floor(float(r[0] * 85) / float(len(leaves) * 100))
+        r = {0: teleport + share, **{n: teleport + share + recv for n in leaves}}
+    assert got == r
+
+
 def test_bfs_hops_min_distance_and_bound(spark):
     """Diamond + tail: 1->2, 1->3, 2->4, 3->4 (4 at MIN hop 2), 4->5,
     5->6 (6 at hop 3... wait: 1,2/3,4,5 -> 5 is hop 3; 6 is hop 4 and

@@ -570,6 +570,34 @@ def test_bpe_flush_rounds_are_bit_identical(spark, monkeypatch):
     assert flushed == baseline
 
 
+def test_bpe_flush_releases_both_caches_when_count_fails(spark, monkeypatch):
+    """A flush whose materializing count() throws after the new vocab
+    was cached must not leak it: both the new frame and the one it
+    replaces are released, so the persisted RDDs return to baseline."""
+    import pytest
+
+    from amazonredshift_blueprints_spark.operators import text as text_mod
+
+    df = spark.createDataFrame(
+        [(1, "low lower lowest low"), (2, "new newer newest")],
+        "doc_id long, text string",
+    )
+    jsc = spark.sparkContext._jsc
+    baseline = set(jsc.getPersistentRDDs().keys())
+    frame_cls = type(df)  # the concrete (classic) DataFrame class
+    real_count = frame_cls.count
+
+    def failing_count(self):
+        real_count(self)  # the flushed vocab is cached by now
+        raise RuntimeError("injected flush failure")
+
+    monkeypatch.setattr(text_mod, "_BPE_FLUSH_EVERY", 1)
+    monkeypatch.setattr(frame_cls, "count", failing_count)
+    with pytest.raises(RuntimeError, match="injected flush failure"):
+        text_mod.train_bpe_merges(df, "doc_id", "text", n_merges=3)
+    assert set(jsc.getPersistentRDDs().keys()) == baseline
+
+
 def test_bpe_apply_matches_python_reference(spark):
     """Train-then-tokenize: per-doc subword counts must equal applying
     the trained merge list with an independent in-memory tokenizer."""

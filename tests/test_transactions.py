@@ -228,7 +228,7 @@ def test_execute_prepared_inside_transaction_rolls_back(spark):
 
 def test_dml_statements_route_through_transaction(spark):
     """Statement-face DELETE/UPDATE inside BEGIN...COMMIT must hit the
-    staged copy (via dml's transactions.resolve_active), so ROLLBACK
+    staged copy (via dml's transactions.rewrite_target), so ROLLBACK
     discards them and COMMIT publishes them atomically."""
     from amazonredshift_blueprints_spark.ingest import _clean_stale_location
     from amazonredshift_blueprints_spark.sqlrun import execute_sql
@@ -269,3 +269,87 @@ def test_dml_statements_route_through_transaction(spark):
         }
     finally:
         spark.sql("DROP TABLE IF EXISTS t_txn_dml")
+
+
+def _partitioned_table(spark, name: str) -> None:
+    from amazonredshift_blueprints_spark.ingest import _clean_stale_location
+
+    spark.sql(f"DROP TABLE IF EXISTS {name}")
+    _clean_stale_location(spark, name, None)
+    spark.sql(
+        f"CREATE TABLE {name} (id INT, v STRING, p INT) USING parquet "
+        "PARTITIONED BY (p) COMMENT 'keep me' TBLPROPERTIES ('team'='etl')"
+    )
+    spark.sql(f"INSERT INTO {name} VALUES (1, 'a', 1), (2, 'b', 1), (3, 'c', 2)")
+
+
+def _execute(spark, stmt: str, in_txn: bool) -> None:
+    for s in ["BEGIN", stmt, "COMMIT"] if in_txn else [stmt]:
+        execute_sql(spark, s)
+
+
+@pytest.mark.parametrize("in_txn", [False, True], ids=["autocommit", "transaction"])
+def test_dml_keeps_partitioning_comment_and_properties(spark, in_txn):
+    """A DELETE must not strip a table's layout. A catalog rename of
+    the rewritten stage would drop the partitioning, comment and table
+    properties, so such a target is overwritten in place — both by
+    autocommit DML and by COMMIT."""
+    _partitioned_table(spark, "t_layout")
+    try:
+        _execute(spark, "DELETE FROM t_layout WHERE id = 1", in_txn)
+        got = {(r.id, r.v, r.p) for r in spark.table("t_layout").collect()}
+        assert got == {(2, "b", 1), (3, "c", 2)}
+        parts = [c.name for c in spark.catalog.listColumns("t_layout") if c.isPartition]
+        assert parts == ["p"]
+        assert spark.catalog.getTable("t_layout").description == "keep me"
+        props = {r.key: r.value for r in spark.sql("SHOW TBLPROPERTIES t_layout").collect()}
+        assert props.get("team") == "etl"
+    finally:
+        spark.sql("DROP TABLE IF EXISTS t_layout")
+
+
+@pytest.mark.parametrize("in_txn", [False, True], ids=["autocommit", "transaction"])
+def test_dml_empties_a_partition_under_dynamic_overwrite(spark, in_txn):
+    """The in-place overwrite publishes the table's whole new state, so
+    it must replace every partition even when the session uses dynamic
+    partition overwrite — which would keep a partition the new state
+    has no rows for, silently undoing a DELETE of that partition."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    _partitioned_table(spark, "t_dynpart")
+    before = spark.conf.get(key)
+    spark.conf.set(key, "dynamic")
+    try:
+        _execute(spark, "DELETE FROM t_dynpart WHERE p = 2", in_txn)
+        got = {(r.id, r.v, r.p) for r in spark.table("t_dynpart").collect()}
+        assert got == {(1, "a", 1), (2, "b", 1)}
+        assert spark.conf.get(key) == "dynamic"
+    finally:
+        spark.conf.set(key, before)
+        spark.sql("DROP TABLE IF EXISTS t_dynpart")
+
+
+def test_transaction_stages_in_the_target_database(spark):
+    """A target outside the current database gets its stage in its own
+    database (a catalog rename cannot cross databases): the first
+    DELETE writes the stage there straight from the target, and COMMIT
+    publishes it without touching the current database."""
+    spark.sql("CREATE DATABASE IF NOT EXISTS txn_stage_db")
+    spark.sql("DROP TABLE IF EXISTS txn_stage_db.t_far")
+    spark.sql("CREATE TABLE txn_stage_db.t_far (k INT, s STRING) USING parquet")
+    spark.sql("INSERT INTO txn_stage_db.t_far VALUES (1, 'a'), (2, 'b'), (3, 'c')")
+    try:
+        execute_sql(spark, "BEGIN")
+        execute_sql(spark, "DELETE FROM txn_stage_db.t_far WHERE k = 2")
+        txn = transactions.active(spark)
+        (qualified, stage), = txn._staged.values()
+        assert stage.startswith("txn_stage_db._bp_txn_")
+        assert spark.table(stage).count() == 2
+        execute_sql(spark, "COMMIT")
+        assert not spark.catalog.tableExists(stage)
+        got = {(r.k, r.s) for r in spark.table("txn_stage_db.t_far").collect()}
+        assert got == {(1, "a"), (3, "c")}
+    finally:
+        if transactions.active(spark) is not None:
+            execute_sql(spark, "ROLLBACK")
+        spark.sql("DROP TABLE IF EXISTS txn_stage_db.t_far")
+        spark.sql("DROP DATABASE IF EXISTS txn_stage_db")
